@@ -189,12 +189,13 @@ def parse_turtle(doc: str) -> list[tuple[str, str, str, str | None, str | None]]
     toks_all = [t for t in _TOKEN_RE.finditer(body)]
     # Reject documents with unlexable content — silently dropping text
     # would break the byte-identical canonical-form contract.
-    covered = bytearray(len(body))
-    for t in toks_all:
-        for i in range(t.start(), t.end()):
-            covered[i] = 1
-    leftover = "".join(ch for ch, c in zip(body, covered) if not c and not ch.isspace())
-    if leftover:
+    # finditer spans are ordered and disjoint, so the uncovered text is
+    # the gaps between consecutive spans (plus the tail)
+    ends = [0, *(t.end() for t in toks_all)]
+    starts = [*(t.start() for t in toks_all), len(body)]
+    gaps = [body[a:b] for a, b in zip(ends, starts) if a < b]
+    if any(not g.isspace() for g in gaps):
+        leftover = "".join(ch for g in gaps for ch in g if not ch.isspace())
         raise ValueError(f"unparseable Turtle content: {leftover[:80]!r}")
     toks = [t for t in toks_all if t.lastgroup != "comment"]
 

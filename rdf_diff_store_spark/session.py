@@ -61,6 +61,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # Executor Python workers start from pyspark_graft_worker (repo
+        # root, importable through the PYTHONPATH set above). It stops
+        # each task's importlib.invalidate_caches() from re-reading the
+        # directories of pyspark.zip and the spark-core jar unless they
+        # changed on disk: ~0.2 CPU-s saved per Python UDF task.
+        .config("spark.python.worker.module", "pyspark_graft_worker")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Joins (optimization guide §3.1/§9): let the planner pick a
         # shuffled-hash join when its size conditions hold instead of

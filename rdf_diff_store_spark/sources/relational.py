@@ -19,16 +19,18 @@ from pyspark.sql import functions as F
 
 from rdf_diff_store_spark.schemas import load_table
 
-# Scan-parallelism metadata cache: (sf_dir, table) -> number of scan
-# partitions Spark plans for the file. Pure FILE METADATA (no query
-# results, no data), stable for a given path within a session — it
-# exists so the widen-or-not decision below doesn't re-plan the scan
-# on every query construction.
-_SCAN_PARTS: dict[tuple[str, str], int] = {}
+# Scan-parallelism metadata cache: (applicationId, sf_dir, table) ->
+# number of scan partitions Spark plans for the file. Pure FILE
+# METADATA (no query results, no data), stable for a given path within
+# a session — it exists so the widen-or-not decision below doesn't
+# re-plan the scan on every query construction. The count depends on
+# the session's conf (cores, maxPartitionBytes), hence the session in
+# the key.
+_SCAN_PARTS: dict[tuple[str, str, str], int] = {}
 
 
 def _scan_partitions(df: DataFrame, sf_dir: str, name: str) -> int:
-    key = (sf_dir, name)
+    key = (df.sparkSession.sparkContext.applicationId, sf_dir, name)
     if key not in _SCAN_PARTS:
         _SCAN_PARTS[key] = df.rdd.getNumPartitions()
     return _SCAN_PARTS[key]

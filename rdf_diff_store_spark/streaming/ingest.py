@@ -22,11 +22,13 @@ commits (src/bin/rdf-diff-writer.rs:109-123). In Spark:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from rdf_diff_store_spark.schemas import CHANGELOG, GRAPH_UPDATES
+from rdf_diff_store_spark.streaming.state import is_path_not_found
 
 
 class StreamingChangelogWriter:
@@ -99,13 +101,16 @@ class StreamingChangelogWriter:
         pathological case — a FRESH stream checkpoint re-feeding old
         data in different batch shapes — by the periodic `compact()`.
         A whole-table shuffle on every read was the wrong place to pay
-        for that last case (r02 VERDICT wrong #3)."""
+        for that last case (r02 VERDICT wrong #3). Only a missing table
+        reads as empty; any other read failure propagates."""
         try:
             return self.spark.read.option("recursiveFileLookup", "true").parquet(
                 self.table_dir
             )
-        except Exception:  # first batch: empty table  # noqa: BLE001
-            return self.spark.createDataFrame([], CHANGELOG)
+        except AnalysisException as e:
+            if not is_path_not_found(e):
+                raise
+            return self.spark.createDataFrame([], CHANGELOG)  # before the first batch
 
     # -- compact current state (one row per graph) ----------------------
     def _latest_state_version(self) -> int | None:
@@ -192,14 +197,12 @@ class StreamingChangelogWriter:
         # one canonicalization pass per batch (eager checkpoint: the
         # frame is read for the fingerprint AND the survivors)
         incoming = canonical_changelog_row(batch_df).localCheckpoint()
-        # only the touched buckets' state is read and rewritten —
-        # bounded driver collect: at most n_buckets distinct values
-        touched = {
-            r.b for r in incoming.select(self._bucket_col().alias("b")).distinct().collect()
-        }
-        state = self._read_state(v, buckets=touched)
-        # order-insensitive batch fingerprint → same-batch replay skip
+        # one job over the batch: the buckets it touches (only their
+        # state is read and rewritten; a bounded driver collect of at
+        # most n_buckets values) and its order-insensitive fingerprint
+        # (→ same-batch replay skip)
         fp_row = incoming.agg(
+            F.collect_set(self._bucket_col()).alias("buckets"),
             F.count("*").alias("n"),
             F.sum(
                 F.xxhash64(
@@ -218,6 +221,7 @@ class StreamingChangelogWriter:
                         return  # this exact batch already committed
             except OSError:
                 pass
+        state = self._read_state(v, buckets=set(fp_row.buckets))
         # normalize (batch ∪ per-graph current state): one window over
         # O(batch + touched graphs) rows; state rows are tagged so only
         # the batch's surviving rows are appended

@@ -27,7 +27,13 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+
+def is_path_not_found(e: AnalysisException) -> bool:
+    """The one read failure that means "nothing written yet"."""
+    return e.getCondition() == "PATH_NOT_FOUND"
 
 
 class AppendOnlyState:
@@ -43,28 +49,32 @@ class AppendOnlyState:
         non-local work_dir (hdfs://, s3a://) a driver-local isdir is
         ALWAYS False, which would silently report empty state — the
         exact silently-zeroed-state fault this class exists to
-        prevent (r04 ADVICE #2).
+        prevent (r04 ADVICE #2). Errors from the FileSystem propagate.
 
         Under Spark Connect the private `_jvm`/`_jsc` handles are
         unavailable (r05 ADVICE #3): fall back to a driver-local check
-        for local paths, else to a cheap schema probe (a read of a
-        missing path raises; an existing one does not)."""
+        for local paths, else to a cheap schema probe in which only
+        PATH_NOT_FOUND means absent."""
         try:
-            jvm = self.spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-            fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            return bool(fs.exists(hpath))
-        except Exception:
-            if "://" not in self.path or self.path.startswith("file:"):
-                local = self.path
-                if local.startswith("file:"):
-                    local = local[len("file:"):]
-                return os.path.exists(local)
-            try:
-                self.spark.read.parquet(self.path).schema
-                return True
-            except Exception:
+            jvm, jsc = self.spark._jvm, self.spark._jsc
+        except AttributeError:  # Spark Connect's PySparkAttributeError too
+            return self._exists_without_jvm()
+        hpath = jvm.org.apache.hadoop.fs.Path(self.path)
+        return bool(hpath.getFileSystem(jsc.hadoopConfiguration()).exists(hpath))
+
+    def _exists_without_jvm(self) -> bool:
+        if "://" not in self.path or self.path.startswith("file:"):
+            local = self.path
+            if local.startswith("file:"):
+                local = local[len("file:"):]
+            return os.path.exists(local)
+        try:
+            self.spark.read.parquet(self.path).schema
+            return True
+        except AnalysisException as e:
+            if is_path_not_found(e):
                 return False
+            raise
 
     def read(self) -> DataFrame:
         """Current state; ONLY a missing directory means empty."""
