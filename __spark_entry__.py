@@ -839,21 +839,14 @@ def q_window_topk_per_group(spark, sf_dir):
 
     r06: WindowGroupLimit already prunes to 2 rows per group on the
     map side, but the map-side SORT it needs ran on the scan's 2
-    row-group splits — when the scan is narrower than the core count,
-    widen the 3-column projection first so the per-partition sorts
-    parallelize (orders.parquet is 2 row groups; measured 1.46→1.26 s
-    at sf1.0, identical rows). Guarded like changelog_from_events: a
+    row-group splits — `widen_if_narrow` repartitions the scan first
+    (column pruning keeps the exchange at the 3 columns the window
+    reads) so the per-partition sorts parallelize (orders.parquet is 2
+    row groups; measured 1.46→1.26 s at sf1.0, identical rows). A
     well-split table at scale skips the extra exchange."""
-    from rdf_diff_store_spark.sources.relational import _scan_partitions
+    from rdf_diff_store_spark.sources.relational import widen_if_narrow
 
-    orders = load_table(spark, sf_dir, "orders")
-    if _scan_partitions(orders, sf_dir, "orders") < spark.sparkContext.defaultParallelism:
-        # hash on the near-unique key, NOT round-robin: a keyless
-        # repartition(n) first locally SORTS its input for determinism
-        # under retries (guide §2.5) — measured 1.26 s vs 0.66 s
-        orders = orders.select(
-            "o_orderpriority", "o_orderkey", "o_totalprice"
-        ).repartition(spark.sparkContext.defaultParallelism, "o_orderkey")
+    orders = widen_if_narrow(load_table(spark, sf_dir, "orders"), "o_orderkey", sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -956,12 +949,9 @@ def q_doc_quality_score(spark, sf_dir):
     measured at sf1.0: 0.91 s → 0.35 s, identical rows (guide §2.5).
     Guarded on actual scan parallelism so a well-split table at scale
     skips the shuffle."""
-    from rdf_diff_store_spark.sources.relational import _scan_partitions
+    from rdf_diff_store_spark.sources.relational import widen_if_narrow
 
-    docs = load_table(spark, sf_dir, "documents")
-    if _scan_partitions(docs, sf_dir, "documents") < spark.sparkContext.defaultParallelism:
-        # keyed, not round-robin: skips sortBeforeRepartition's local sort
-        docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    docs = widen_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id", sf_dir, "documents")
     alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
     total = F.length(F.col("text"))
     n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
@@ -1052,12 +1042,9 @@ def q_ann_cosine_topk(spark, sf_dir):
     expression work; identical arithmetic, so cos_sim is bit-equal).
     Measured at sf1.0: 2.03 s → 0.54 s, identical rows. Guarded on
     actual scan parallelism so a well-split table skips the shuffle."""
-    from rdf_diff_store_spark.sources.relational import _scan_partitions
+    from rdf_diff_store_spark.sources.relational import widen_if_narrow
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    if _scan_partitions(emb, sf_dir, "embeddings") < spark.sparkContext.defaultParallelism:
-        # keyed, not round-robin: skips sortBeforeRepartition's local sort
-        emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = widen_if_narrow(load_table(spark, sf_dir, "embeddings"), "vec_id", sf_dir, "embeddings")
 
     def dot(a, b):
         return F.aggregate(

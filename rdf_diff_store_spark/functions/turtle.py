@@ -35,7 +35,7 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,6 +65,7 @@ _TOKEN_RE = re.compile(
 
 _RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _XSD_NS = "http://www.w3.org/2001/XMLSchema#"
+_XSD_STRING = _XSD_NS + "string"
 
 _ESCAPES = {"\\n": "\n", "\\t": "\t", "\\r": "\r", '\\"': '"', "\\'": "'", "\\\\": "\\"}
 _UNESCAPE_RE = re.compile(r"\\u[0-9a-fA-F]{4}|\\U[0-9a-fA-F]{8}|\\[ntr\"'\\]")
@@ -327,29 +328,66 @@ def parse_turtle(doc: str) -> list[tuple[str, str, str, str | None, str | None]]
 
 
 def serialize_triple(subj: str, pred: str, obj: str, obj_dt: str | None, obj_lang: str | None) -> str:
-    """One N-Triples line, deterministic."""
+    """One canonical N-Triples line. `ntriples_line` is its JVM twin:
+    the two must agree byte for byte, since the line is the content
+    hash's input (tests/test_ntriples_line.py pins it). The object is a
+    literal iff obj_dt or obj_lang is set; a language tag wins over a
+    datatype, and xsd:string is elided."""
     s = subj if subj.startswith("_:") else f"<{subj}>"
     p = f"<{pred}>"
     if obj_dt is None and obj_lang is None:
         o = obj if obj.startswith("_:") else f"<{obj}>"
     else:
         o = f'"{_escape(obj)}"'
-        if obj_lang:
+        if obj_lang is not None:
             o += f"@{obj_lang}"
-        elif obj_dt and obj_dt != "http://www.w3.org/2001/XMLSchema#string":
+        elif obj_dt != _XSD_STRING:
             o += f"^^<{obj_dt}>"
     return f"{s} {p} {o} ."
 
 
+def _escape_jvm(col: Column) -> Column:
+    """`_escape` as a JVM literal-replace chain (backslash FIRST — it is
+    the escape introducer)."""
+    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
+    out = F.replace(out, F.lit('"'), F.lit('\\"'))
+    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
+    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
+    return F.replace(out, F.lit("\t"), F.lit("\\t"))
+
+
+def _iri_or_bnode(col: Column) -> Column:
+    return F.when(col.startswith("_:"), col).otherwise(F.concat(F.lit("<"), col, F.lit(">")))
+
+
+def ntriples_line(subj: Column, pred: Column, obj: Column, obj_dt: Column, obj_lang: Column) -> Column:
+    """JVM twin of `serialize_triple`: one canonical N-Triples line (no
+    trailing newline) as a pure built-in expression, so every writer of
+    the canonical form (serialize_graph, the N-Quads and RDF Patch
+    sinks, the KG changelog) stays whole-stage codegen with no Python.
+    A NULL subj, pred or obj gives a NULL line."""
+    lit = F.concat(F.lit('"'), _escape_jvm(obj), F.lit('"'))
+    o = (
+        F.when(obj_lang.isNotNull(), F.concat(lit, F.lit("@"), obj_lang))
+        .when(obj_dt == _XSD_STRING, lit)
+        .when(obj_dt.isNotNull(), F.concat(lit, F.lit("^^<"), obj_dt, F.lit(">")))
+        .otherwise(_iri_or_bnode(obj))
+    )
+    return F.concat(_iri_or_bnode(subj), F.lit(" <"), pred, F.lit("> "), o, F.lit(" ."))
+
+
 def canonicalize(doc: str | None) -> str | None:
-    """Canonical byte form of a Turtle document: parse → sort → emit
-    sorted N-Triples. This is the prettifier analog (reference:
-    src/rdf.rs:29-84) and the idempotence key (src/graphs.rs:52-61):
-    pure function of the payload, byte-identical across runs.
+    """Canonical byte form of a Turtle document: parse → emit each
+    distinct triple once as sorted N-Triples. This is the prettifier
+    analog (reference: src/rdf.rs:29-84) and the idempotence key
+    (src/graphs.rs:52-61): pure function of the payload,
+    byte-identical across runs.
     """
     if doc is None:
         return None
-    lines = sorted(serialize_triple(*t) for t in parse_turtle(doc))
+    # a graph is a SET of triples: a repeated statement must not change
+    # the bytes (or the content hash)
+    lines = sorted({serialize_triple(*t) for t in parse_turtle(doc)})
     return "\n".join(lines) + ("\n" if lines else "")
 
 
@@ -384,7 +422,6 @@ _TRIPLES_OUT_SCHEMA = (
 # all-lines gate is sound). Fast path and fallback are pinned
 # equivalent by tests/test_turtle_fast_path.py.
 _FAST_NT_RE = re.compile(r'^<([^>\\]*)> <([^>\\]*)> (?:<([^>\\]*)>|"([^"\\]*)") \.$')
-_XSD_STRING = _XSD_NS + "string"
 
 
 def parse_triples(changelog: DataFrame, passthrough: str | None = None) -> DataFrame:
@@ -490,55 +527,16 @@ def parse_triples(changelog: DataFrame, passthrough: str | None = None) -> DataF
 def serialize_graph(triples: DataFrame) -> DataFrame:
     """Per-graph canonical Turtle text — the snapshot-as-document path
     (reference: src/rdf.rs:87-92 to_turtle + prettify). Deterministic:
-    lines are built JVM-side with concat and sorted inside the group.
+    `ntriples_line` builds the lines JVM-side and each distinct line is
+    kept once, sorted inside the group, so each graph's doc is
+    `canonicalize` of its triples without the trailing newline.
 
     Input: triples (graph_id, subj, pred, obj, obj_dt, obj_lang).
     Output: (graph_id, doc string).
     """
-    line = F.concat(
-        F.when(F.col("subj").startswith("_:"), F.col("subj")).otherwise(F.concat(F.lit("<"), F.col("subj"), F.lit(">"))),
-        F.lit(" <"),
-        F.col("pred"),
-        F.lit("> "),
-        F.when(
-            F.col("obj_dt").isNull() & F.col("obj_lang").isNull(),
-            F.when(F.col("obj").startswith("_:"), F.col("obj")).otherwise(
-                F.concat(F.lit("<"), F.col("obj"), F.lit(">"))
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit('"'),
-                # escape set must match _escape byte-for-byte (\\ " \n \r \t)
-                # or the canonical-form/content-hash contract breaks
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.regexp_replace(
-                            F.regexp_replace(
-                                F.regexp_replace(F.col("obj"), r"\\", r"\\\\"), '"', '\\\\"'
-                            ),
-                            "\n",
-                            r"\\n",
-                        ),
-                        "\r",
-                        r"\\r",
-                    ),
-                    "\t",
-                    r"\\t",
-                ),
-                F.lit('"'),
-                F.when(F.col("obj_lang").isNotNull(), F.concat(F.lit("@"), F.col("obj_lang")))
-                .when(
-                    F.col("obj_dt").isNotNull()
-                    & (F.col("obj_dt") != "http://www.w3.org/2001/XMLSchema#string"),
-                    F.concat(F.lit("^^<"), F.col("obj_dt"), F.lit(">")),
-                )
-                .otherwise(F.lit("")),
-            )
-        ),
-        F.lit(" ."),
-    )
+    line = ntriples_line(F.col("subj"), F.col("pred"), F.col("obj"), F.col("obj_dt"), F.col("obj_lang"))
     return (
         triples.select("graph_id", line.alias("line"))
         .groupBy("graph_id")
-        .agg(F.array_join(F.array_sort(F.collect_list("line")), "\n").alias("doc"))
+        .agg(F.array_join(F.array_sort(F.collect_set("line")), "\n").alias("doc"))
     )

@@ -88,8 +88,7 @@ def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
 
 
 def shingle_frame(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 3,
-    parts_per_core: int = 1,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 3
 ) -> DataFrame:
     """Materialized (_id, _sh) shingle-set frame, shareable between
     LSH banding and exact-Jaccard verification so the shingling work
@@ -99,23 +98,12 @@ def shingle_frame(
     compact text rows into a couple of partitions, which would pin
     the downstream MinHash compute (the CPU-heaviest expression in
     the pipeline) to a couple of cores. Partition count is decoupled
-    from byte size on purpose.
-
-    ``parts_per_core`` multiplies the partition count. r04 ran a
-    hard-coded 4x to shave the straggler tail at the eager-checkpoint
-    barrier; re-measured in r06 at the kg bench scale (22.8k docs,
-    local[32]) the 4x frame cost 1.14 s vs 0.43 s at 1x — the
-    scheduling + checkpoint overhead of 128 partitions, inherited by
-    EVERY downstream frame (signatures, band rows, both join sides),
-    outweighed the tail saving. Default is now 1x; callers with
-    genuinely skewed per-doc cost can raise it."""
-    spark = df.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism * parts_per_core
+    from byte size on purpose: one partition per core."""
     return (
         # keyed repartition (ids are unique → even spread): a keyless
         # repartition(n) pays sortBeforeRepartition's local sort of the
         # input first (guide §2.5)
-        df.repartition(n_parts, F.col(id_col))
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
         .select(
             F.col(id_col).alias("_id"),
             word_shingles(F.col(text_col), shingle_n).alias("_sh"),

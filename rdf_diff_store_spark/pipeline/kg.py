@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rdf_diff_store_spark.functions.text import extract_text_udf
+from rdf_diff_store_spark.functions.turtle import ntriples_line
 from rdf_diff_store_spark.metrics import StageRecorder
 from rdf_diff_store_spark.operators.dedup import jaccard_on_pairs, lsh_candidate_pairs
 from rdf_diff_store_spark.operators.graph import connected_components
@@ -169,34 +170,27 @@ def quads_of(mentions: DataFrame, extracted: DataFrame, entity_map: DataFrame) -
     return mention_quads.unionByName(lang_quads).unionByName(fp_quads)
 
 
-def changelog_of(quads: DataFrame, pages: DataFrame) -> DataFrame:
-    """Stage 7: per-(url, warc_ts) canonical payload + content hash,
-    tombstones for urls that vanish from later crawl rounds, then
-    consecutive-duplicate compaction (bulk-replay idempotence)."""
-    from rdf_diff_store_spark.operators.versioned import compact_changelog
+def canonical_adds(quads: DataFrame) -> DataFrame:
+    """Quads (graph_id, subj, pred, obj, obj_dt, obj_lang, warc_ts) →
+    one add row per (graph_id, ts): payload = the sorted DISTINCT
+    canonical lines, newline-terminated (a graph is a SET of triples:
+    re-sent rows or duplicate quads never change it), and content_hash
+    = sha2-256 of it. The batch changelog (`changelog_of`) and the stream
+    (streaming/kg_stream.py) both build their adds here, so they hash
+    the same capture identically.
 
-    line = F.concat(
-        F.lit("<"), F.col("subj"), F.lit("> <"), F.col("pred"), F.lit("> "),
-        F.when(
-            F.col("obj_dt").isNull() & F.col("obj_lang").isNull(),
-            F.concat(F.lit("<"), F.col("obj"), F.lit(">")),
-        ).otherwise(F.concat(F.lit('"'), F.col("obj"), F.lit('"'))),
-        F.lit(" ."),
-    )
-    # ONE exchange for the whole adds branch (r06, guide §2.4): hash-
-    # repartitioning the narrow (graph_id, ts, line) projection on
-    # graph_id satisfies the ClusteredDistribution of BOTH the
-    # per-(graph_id, ts) payload aggregation and compact_changelog's
-    # graph_id window below, so the agg plans complete-mode with no
-    # second shuffle of the adds rows. Measured at bench scale
-    # (445k quads): changelog stage 1.69 s → 1.15 s, identical rows.
-    spark = quads.sparkSession
-    adds = (
+    ONE exchange (r06, guide §2.4): hash-repartitioning the narrow
+    (graph_id, ts, line) projection on graph_id satisfies the
+    ClusteredDistribution of BOTH the per-(graph_id, ts) payload
+    aggregation and compact_changelog's graph_id window, so the agg
+    plans complete-mode with no second shuffle of the adds rows.
+    Measured at bench scale (445k quads): changelog stage 1.69 s →
+    1.15 s, identical rows."""
+    line = ntriples_line(F.col("subj"), F.col("pred"), F.col("obj"), F.col("obj_dt"), F.col("obj_lang"))
+    return (
         quads.select(F.col("graph_id"), F.col("warc_ts").alias("ts"), line.alias("line"))
-        .repartition(spark.sparkContext.defaultParallelism, "graph_id")
+        .repartition(quads.sparkSession.sparkContext.defaultParallelism, "graph_id")
         .groupBy("graph_id", "ts")
-        # collect_set: a graph is a SET of triples — re-sent rows or
-        # duplicate quads can never change the canonical payload
         .agg(F.concat_ws("\n", F.array_sort(F.collect_set("line"))).alias("payload"))
         .select(
             "graph_id",
@@ -206,6 +200,15 @@ def changelog_of(quads: DataFrame, pages: DataFrame) -> DataFrame:
         )
         .withColumn("content_hash", F.sha2(F.col("payload"), 256))
     )
+
+
+def changelog_of(quads: DataFrame, pages: DataFrame) -> DataFrame:
+    """Stage 7: per-(url, warc_ts) canonical payload + content hash,
+    tombstones for urls that vanish from later crawl rounds, then
+    consecutive-duplicate compaction (bulk-replay idempotence)."""
+    from rdf_diff_store_spark.operators.versioned import compact_changelog
+
+    adds = canonical_adds(quads)
     # tombstones: a url whose last capture precedes the last crawl
     # round is deleted at the first later round. The crawl-round frame
     # is tiny (one row per round), so "next round" is a broadcast

@@ -70,13 +70,15 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Joins (optimization guide §3.1/§9): let the planner pick a
         # shuffled-hash join when its size conditions hold instead of
-        # always sort-merge (skips both sort passes; spill safety is
-        # preserved by the size conditions), and let AQE rewrite a
-        # planned sort-merge join to shuffled-hash at runtime when
-        # every post-shuffle partition is under 64 MB (bounded build
-        # side ⇒ no OOM risk; the 0-default leaves this rewrite off).
-        # Cluster-valid: both are size-gated, not host-tuned.
-        # Measured at sf1.0: tpch_q3 1.15→1.05 s, tpch_q5 0.92→0.81 s.
+        # always sort-merge (skips both sort passes), and let AQE
+        # rewrite a planned sort-merge join to shuffled-hash at runtime
+        # when every post-shuffle partition is under 64 MB (the
+        # 0-default leaves this rewrite off). A hash build side cannot
+        # spill: the static choice rests on Catalyst size ESTIMATES,
+        # only the AQE one on measured shuffle sizes. Each one turns a
+        # sort-merge join into a shuffled-hash join in explain_audit's
+        # plans (web_triangles statically; a full-outer join on `node`
+        # at runtime): plans/joins/.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

@@ -14,9 +14,10 @@ multi-TB dump parallelizes with NO container index (contrast WARC's
 Content-Length framing, sources/warc.py). That property drives the
 design here:
 
-* ``nquad_line(...)`` — the SINK is a pure JVM expression (escape
-  chain + term formation in whole-stage codegen, map-only, zero
-  Python at any scale).
+* ``nquad_line(...)`` — the SINK is a pure JVM expression: the
+  canonical line from ``functions.turtle.ntriples_line`` (the one JVM
+  writer of term syntax and escaping) plus the graph label — map-only
+  whole-stage codegen, zero Python at any scale.
 * ``parse_nquads(...)`` — the SOURCE is one Arrow hop
   (``mapInPandas`` over a strict per-line regex), the same shape as
   the Turtle bulk parser (functions/turtle.py::parse_triples);
@@ -36,25 +37,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rdf_diff_store_spark.functions.turtle import _unescape
+from rdf_diff_store_spark.functions.turtle import _iri_or_bnode, _unescape, ntriples_line
 
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
-
-def _escape_jvm(col: Column) -> Column:
-    """N-Triples string-literal escaping as a JVM literal-replace
-    chain (backslash FIRST — it is the escape introducer)."""
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    return F.replace(out, F.lit("\t"), F.lit("\\t"))
-
-
-def _iri_or_bnode(col: Column) -> Column:
-    return F.when(col.startswith("_:"), col).otherwise(
-        F.concat(F.lit("<"), col, F.lit(">"))
-    )
 
 
 def nquad_line(
@@ -66,27 +51,16 @@ def nquad_line(
     graph: Column,
 ) -> Column:
     """One N-Quads statement line (no trailing newline) as a pure JVM
-    expression. NULL graph → triple in the default graph (the graph
-    term is simply omitted, per spec §2). The object is a literal
-    iff obj_dt or obj_lang is set (turtle.py::serialize_triple's
-    contract, reference src/rdf.rs:29-84); xsd:string is elided."""
-    lit_term = F.concat(F.lit('"'), _escape_jvm(obj), F.lit('"'))
-    lit_term = F.when(obj_lang.isNotNull(), F.concat(lit_term, F.lit("@"), obj_lang)).otherwise(
-        F.when(
-            obj_dt.isNotNull() & (obj_dt != XSD_STRING),
-            F.concat(lit_term, F.lit("^^<"), obj_dt, F.lit(">")),
-        ).otherwise(lit_term)
+    expression: the canonical N-Triples line (turtle.ntriples_line)
+    with the graph label inserted before its terminating `` .``. NULL
+    graph → triple in the default graph (the graph term is simply
+    omitted, per spec §2)."""
+    line = ntriples_line(subj, pred, obj, obj_dt, obj_lang)
+    return F.when(graph.isNull(), line).otherwise(
+        F.concat(
+            line.substr(F.lit(1), F.length(line) - 2), F.lit(" "), _iri_or_bnode(graph), F.lit(" .")
+        )
     )
-    o = F.when(obj_dt.isNotNull() | obj_lang.isNotNull(), lit_term).otherwise(
-        _iri_or_bnode(obj)
-    )
-    head = F.concat(
-        _iri_or_bnode(subj), F.lit(" <"), pred, F.lit("> "), o
-    )
-    return F.when(
-        graph.isNotNull(),
-        F.concat(head, F.lit(" "), _iri_or_bnode(graph), F.lit(" .")),
-    ).otherwise(F.concat(head, F.lit(" .")))
 
 
 def serialize_nquads(triples: DataFrame, graph_col: str = "graph_id") -> DataFrame:

@@ -36,6 +36,23 @@ def _scan_partitions(df: DataFrame, sf_dir: str, name: str) -> int:
     return _SCAN_PARTS[key]
 
 
+def widen_if_narrow(df: DataFrame, key: str, sf_dir: str, table: str) -> DataFrame:
+    """Scan-parallelism guard (r06). The driver's tables are mostly ONE
+    parquet row group, so a scan-side projection ran on 1-2 cores.
+    When the scan of `table` (a map-only frame `df` over it) has fewer
+    splits than the session's cores, hash-repartition `df` on `key` to
+    the core count; otherwise return it unchanged. A well-split table
+    at scale keeps its plan, since the guard compares scan splits with
+    defaultParallelism, not with any host constant. Hash on a
+    near-unique key, never round-robin: a keyless repartition(n) first
+    sorts its input locally for determinism under retries (guide §2.5;
+    measured 1.26 s vs 0.66 s in window_topk)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if _scan_partitions(df, sf_dir, table) < n:
+        return df.repartition(n, key)
+    return df
+
+
 def changelog_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → changelog(graph_id, ts, op, payload, content_hash).
 
@@ -46,28 +63,21 @@ def changelog_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     any UDF. Value is encoded as integer cents so the string form is
     engine-independent.
 
-    Scan-parallelism guard (r06): the driver's events.parquet is ONE
-    row group, so the whole scan — and, in the old plan, the payload
-    concat + 1M sha2 calls AND the map side of the downstream
-    aggregation — ran in a single task. When the scan has fewer
-    splits than the session's core count, the derivation hash-
-    repartitions on graph_id right after a cheap projection and
-    computes payload/sha2 AFTER that exchange: the serial task does
-    only parquet decode + shuffle write, and the exchange doubles as
-    the one every downstream versioned operator (groupBy graph_id /
-    window graph_id) needs, so the plan's Exchange count is
-    unchanged. With a well-split changelog (the 100 TB layout) the
-    scan is already wide and the original partial-aggregation-
-    friendly shape is kept — the guard compares scan splits to
-    defaultParallelism, not to any host constant. Measured at sf1.0
-    (1M events, local[32]): snapshot_at 1.03→0.72 s, diff_versions
-    2.22→0.99 s, compact_versions 1.83→1.18 s, identical rows.
+    Scan-parallelism guard (`widen_if_narrow`): the driver's
+    events.parquet is ONE row group, so the whole scan — and, in the
+    old plan, the payload concat + 1M sha2 calls AND the map side of
+    the downstream aggregation — ran in a single task. Widened, the
+    cheap projection is hash-repartitioned on graph_id and payload/
+    sha2 run AFTER that exchange: the serial task does only parquet
+    decode + shuffle write, and the exchange doubles as the one every
+    downstream versioned operator (groupBy graph_id / window
+    graph_id) needs, so the plan's Exchange count is unchanged. Not
+    widened, the same projections run inside the scan's codegen
+    stage, with no exchange. Measured at sf1.0 (1M events, local[32]): snapshot_at
+    1.03→0.72 s, diff_versions 2.22→0.99 s, compact_versions 1.83→
+    1.18 s, identical rows.
     """
     ev = load_table(spark, sf_dir, "events")
-    widen = (
-        _scan_partitions(ev, sf_dir, "events")
-        < spark.sparkContext.defaultParallelism
-    )
     payload = F.concat(
         F.lit("<http://ex.org/user/"),
         F.col("user_id").cast("string"),
@@ -76,37 +86,26 @@ def changelog_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("\" ."),
     )
     op = F.when(F.col("event_type") == "error", F.lit("delete")).otherwise(F.lit("add"))
-    if widen:
-        pre = ev.select(
-            F.concat(F.lit("user:"), F.col("user_id").cast("string")).alias("graph_id"),
-            F.col("ts"),
-            op.alias("op"),
-            F.col("user_id"),
-            F.col("value"),
-        ).repartition(spark.sparkContext.defaultParallelism, "graph_id")
-        return pre.select(
-            "graph_id",
-            "ts",
-            "op",
-            F.when(F.col("op") == "delete", F.lit(None).cast("string"))
-            .otherwise(payload)
-            .alias("payload"),
-        ).withColumn(
-            "content_hash",
-            F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
-                F.sha2(F.col("payload"), 256)
-            ),
-        )
-    return ev.select(
+    pre = ev.select(
         F.concat(F.lit("user:"), F.col("user_id").cast("string")).alias("graph_id"),
         F.col("ts"),
         op.alias("op"),
-        F.when(op == "delete", F.lit(None).cast("string")).otherwise(payload).alias("payload"),
-    ).withColumn(
-        "content_hash",
-        F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
-            F.sha2(F.col("payload"), 256)
-        ),
+        F.col("user_id"),
+        F.col("value"),
+    )
+    tomb = F.col("op") == "delete"
+    return (
+        widen_if_narrow(pre, "graph_id", sf_dir, "events")
+        .select(
+            "graph_id",
+            "ts",
+            "op",
+            F.when(tomb, F.lit(None).cast("string")).otherwise(payload).alias("payload"),
+        )
+        .withColumn(
+            "content_hash",
+            F.when(tomb, F.lit(None).cast("string")).otherwise(F.sha2(F.col("payload"), 256)),
+        )
     )
 
 

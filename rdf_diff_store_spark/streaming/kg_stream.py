@@ -34,33 +34,16 @@ from rdf_diff_store_spark.schemas import PAGES
 
 def pages_to_changelog_rows(pages_batch: DataFrame, entity_map: DataFrame) -> DataFrame:
     """One micro-batch of pages → candidate changelog rows
-    (graph_id, ts, op='add', payload, format) with canonical payloads.
-    Pure function of (batch, entity_map) — replays are idempotent
-    because downstream append_updates dedups on content hash."""
-    from rdf_diff_store_spark.pipeline.kg import extract_pages, mentions_of, quads_of
+    (graph_id, ts, op='add', payload, content_hash, format) built by the
+    batch pipeline's own `canonical_adds`, so a capture hashes the same
+    in both paths. Pure function of (batch, entity_map) — replays are
+    idempotent because downstream append_updates dedups on content
+    hash."""
+    from rdf_diff_store_spark.pipeline.kg import canonical_adds, extract_pages, mentions_of, quads_of
 
     extracted = extract_pages(pages_batch)
     quads = quads_of(mentions_of(extracted), extracted, entity_map)
-    line = F.concat(
-        F.lit("<"), F.col("subj"), F.lit("> <"), F.col("pred"), F.lit("> "),
-        F.when(
-            F.col("obj_dt").isNull() & F.col("obj_lang").isNull(),
-            F.concat(F.lit("<"), F.col("obj"), F.lit(">")),
-        ).otherwise(F.concat(F.lit('"'), F.col("obj"), F.lit('"'))),
-        F.lit(" ."),
-    )
-    return (
-        quads.select(F.col("graph_id"), F.col("warc_ts").alias("ts"), line.alias("line"))
-        .groupBy("graph_id", "ts")
-        .agg(F.concat_ws("\n", F.array_sort(F.collect_list("line"))).alias("payload"))
-        .select(
-            "graph_id",
-            "ts",
-            F.lit("add").alias("op"),
-            F.concat(F.col("payload"), F.lit("\n")).alias("payload"),
-            F.lit("text/turtle").alias("format"),
-        )
-    )
+    return canonical_adds(quads).withColumn("format", F.lit("text/turtle"))
 
 
 class StreamingKgWriter:

@@ -55,6 +55,9 @@ from rdf_diff_store_spark.pipeline.kg import build_kg
 cpus = int(os.environ["SPARK_GRAFT_CPUS"])
 n_urls = int(os.environ.get("SPARK_GRAFT_KG_URLS", "400000"))
 reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
+# per-JOB shuffle sizing (production practice: partitions follow the
+# data, ~2-4x total cores). Same formula at BOTH levels; the library
+# default (max(cpus, 8)) stays tuned for the small-sf bench suite.
 mult = int(os.environ.get("SPARK_GRAFT_SHUFFLE_MULT", "1"))
 spark = get_spark("bench-scaling-clocked", cpus=cpus,
                   shuffle_partitions=max(cpus * mult, 8))

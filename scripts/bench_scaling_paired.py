@@ -1,12 +1,14 @@
 """Interleaved (paired) scaling-efficiency evidence for the north_rule.
 
-The sequential two-block design (scripts/bench_scaling.py) is exposed
+A sequential two-block design (all N blocks, then all 4N) is exposed
 to host drift: the sandbox is a VM with visible steal time, and rep
 walls swing ±130% minute-to-minute, so a leg measured in a congested
 half-hour is penalized against the other leg. This variant interleaves
 JVM blocks A(local[2N]) B(local[8... 4N]) A B ... so both levels sample
 the SAME time-varying host conditions; the per-level statistic is the
 min wall across all of that level's blocks (standard noise floor).
+Each block runs `bench_scaling_clocked.py`'s runner, without its
+spinners or CPU pinning.
 
 Usage: python scripts/bench_scaling_paired.py
 Env: SPARK_GRAFT_SCALE_N (default 2), SPARK_GRAFT_KG_URLS (default
@@ -24,33 +26,8 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_RUNNER = """
-import os, time, json
-from rdf_diff_store_spark import get_spark
-from rdf_diff_store_spark.sources.pages import generate_pages
-from rdf_diff_store_spark.pipeline.kg import build_kg
-
-cpus = int(os.environ["SPARK_GRAFT_CPUS"])
-n_urls = int(os.environ.get("SPARK_GRAFT_KG_URLS", "400000"))
-reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-# per-JOB shuffle sizing (production practice: partitions follow the
-# data, ~2-4x total cores). Same formula at BOTH levels; the library
-# default (max(cpus, 8)) stays tuned for the small-sf bench suite.
-mult = int(os.environ.get("SPARK_GRAFT_SHUFFLE_MULT", "1"))
-spark = get_spark("bench-scaling", cpus=cpus,
-                  shuffle_partitions=max(cpus * mult, 8))
-pages = (generate_pages(spark, n_urls=n_urls, n_crawls=4,
-                        n_entities=max(n_urls // 10, 50), partitions=64)
-         .select("url", "warc_ts", "html", "text", "lang").localCheckpoint())
-n_pages = pages.count()
-build_kg(spark, pages)  # full-scale warmup rep, discarded (JIT+AQE plans)
-walls = []
-for _ in range(reps):
-    t0 = time.perf_counter()
-    build_kg(spark, pages)
-    walls.append(round(time.perf_counter() - t0, 3))
-print(json.dumps({"cpus": cpus, "pages": n_pages, "walls": walls}))
-"""
+sys.path.insert(0, REPO)
+from scripts.bench_scaling_clocked import _RUNNER  # noqa: E402
 
 
 def run_block(cpus: int) -> dict:

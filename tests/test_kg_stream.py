@@ -10,9 +10,11 @@ from rdf_diff_store_spark.operators.versioned import snapshot_at
 from rdf_diff_store_spark.pipeline.kg import (
     alias_edges,
     canonical_entity_map,
+    changelog_of,
     extract_pages,
     first_capture,
     mentions_of,
+    quads_of,
 )
 from rdf_diff_store_spark.sources.pages import generate_pages
 from rdf_diff_store_spark.streaming.kg_stream import (
@@ -27,6 +29,36 @@ T_END = "2024-02-01 00:00:00"
 def _entity_map(spark, pages):
     ext = extract_pages(pages)
     return canonical_entity_map(alias_edges(first_capture(ext), mentions_of(first_capture(ext))))
+
+
+def _batch_changelog(pages, emap):
+    ext = extract_pages(pages)
+    return changelog_of(quads_of(mentions_of(ext), ext, emap), pages)
+
+
+def test_repeated_capture_hashes_like_batch(spark):
+    """A capture that arrives twice is still one graph version: the
+    stream's rows carry the same content hash as the batch changelog's
+    for every (url, ts) the batch keeps."""
+    pages = (
+        generate_pages(spark, n_urls=20, n_crawls=2, n_entities=10)
+        .select("url", "warc_ts", "html", "text", "lang")
+        .localCheckpoint()
+    )
+    pages = pages.unionByName(pages.limit(1)).localCheckpoint()
+    emap = _entity_map(spark, pages).localCheckpoint()
+    (repeated,) = pages.groupBy("url", "warc_ts").count().filter("count > 1").collect()
+
+    batch = {
+        (r.graph_id, r.ts): r.content_hash
+        for r in _batch_changelog(pages, emap).filter(F.col("op") == "add").collect()
+    }
+    stream_rows = pages_to_changelog_rows(pages, emap).select(
+        "graph_id", "ts", F.sha2("payload", 256).alias("content_hash")
+    )
+    stream = {(r.graph_id, r.ts): r.content_hash for r in stream_rows.collect()}
+    assert (repeated.url, repeated.warc_ts) in batch
+    assert {k: stream[k] for k in batch} == batch
 
 
 def test_streaming_kg_matches_batch_adds(spark, tmp_path):
@@ -51,17 +83,21 @@ def test_streaming_kg_matches_batch_adds(spark, tmp_path):
     streamed = writer.read_changelog()
     assert snapshot_at(streamed, T_END).count() >= mid_snapshot
 
-    # batch reference: same pages, same entity map, one shot
-    batch_rows = pages_to_changelog_rows(pages, emap)
+    # batch reference: the batch pipeline's changelog over the same
+    # pages and entity map, one shot
+    batch_rows = _batch_changelog(pages, emap)
     s_stream = {
         (r.graph_id, r.content_hash) for r in snapshot_at(streamed, T_END).collect()
     }
-    # latest-wins over the batch add-rows (no tombstones in either path)
+    # latest-wins over the batch add-rows: the stream writes no
+    # crawl-round tombstones, and compaction only drops an add equal
+    # to the one before it, so the latest add's hash is unchanged
     w = Window.partitionBy("graph_id").orderBy(F.col("ts").desc())
     latest_batch = (
-        batch_rows.withColumn("_rn", F.row_number().over(w))
+        batch_rows.filter(F.col("op") == "add")
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select("graph_id", F.sha2("payload", 256).alias("content_hash"))
+        .select("graph_id", "content_hash")
     )
     s_batch = {(r.graph_id, r.content_hash) for r in latest_batch.collect()}
     assert s_stream == s_batch
