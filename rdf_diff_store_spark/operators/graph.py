@@ -27,6 +27,72 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _collect_if_small(
+    e: DataFrame, max_rows: int, max_bytes: int
+) -> tuple[int, float, list | None]:
+    """Driver-side size gate of `transitive_closure` and
+    `connected_components` over a distinct, checkpointed (src, dst)
+    frame: ONE stats job (row count + average id length; two actions
+    would double the per-job latency the driver paths exist to avoid,
+    r06), then the row and byte budgets. Returns (row count, estimated
+    driver bytes per row, the collected rows or None if over budget)."""
+    n, avg_len = e.agg(
+        F.count("*"),
+        F.avg(F.length(F.col("src").cast("string")) + F.length(F.col("dst").cast("string"))),
+    ).first()
+    row_bytes = (avg_len or 16.0) + 96.0  # python tuple/str overhead
+    if n <= max_rows and n * row_bytes <= max_bytes:
+        return n, row_bytes, e.collect()
+    return n, row_bytes, None
+
+
+def _frontier_bfs(
+    edges: DataFrame,
+    start: DataFrame,
+    keys: tuple[str, ...],
+    max_iterations: int,
+    name: str,
+    hop_col: str | None = None,
+) -> DataFrame:
+    """The frontier BFS behind `seeded_closure`, `reachable_set`,
+    `seeded_distances` and `_labeled_reach`: distinct (*keys, node)
+    rows reachable (path length >= 1) from `start`'s (*keys, node)
+    rows over a distinct, checkpointed (src, dst) `edges` frame; extra
+    edge columns (a subset of `keys`) confine expansion to the row's
+    own scope. Per iteration one hash join frontier⋈edges plus one
+    anti-join against the reached set; eager checkpoints cut lineage.
+    `hop_col` carries each row's discovery depth (= min distance).
+    Raises rather than return a partial reach."""
+    # edge columns renamed apart: duplicate attribute names inside the
+    # join trip LogicalRDD's constraint rewrite on localCheckpoint
+    # (NoSuchElementException: key not found) in Spark 4
+    er = edges.select(*[F.col(c).alias(f"_e_{c}") for c in edges.columns])
+    on = F.col("node") == F.col("_e_src")
+    for k in edges.columns:
+        if k not in ("src", "dst"):
+            on = on & (F.col(k) == F.col(f"_e_{k}"))
+
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        nxt = frontier.join(er, on).select(*keys, F.col("_e_dst").alias("node")).distinct()
+        return nxt if hop_col is None else nxt.withColumn(hop_col, F.lit(hop))
+
+    frontier = expand(start.select(*keys, "node").distinct(), 1).localCheckpoint()
+    reached = frontier
+    for hop in range(2, max_iterations + 2):
+        if frontier.count() == 0:
+            return reached
+        frontier = (
+            expand(frontier, hop)
+            .join(reached, [*keys, "node"], "left_anti")
+            .localCheckpoint()
+        )
+        reached = reached.unionByName(frontier).localCheckpoint()
+    if frontier.count() == 0:
+        # converged exactly on the last allowed expansion
+        return reached
+    raise RuntimeError(f"{name} did not converge in {max_iterations} iterations")
+
+
 def transitive_closure(
     edges: DataFrame, max_iterations: int = 20, key_cols: tuple[str, ...] = (),
     driver_threshold: int = 200_000, driver_max_bytes: int = 64 * 1024 * 1024,
@@ -43,49 +109,46 @@ def transitive_closure(
     Small-edge-set fast path (r06): the doubling loop costs ~2 driver
     actions per round (checkpoint + convergence count) — pure job-
     scheduling latency when the edge set is a few hundred rows (the
-    SPARQL p+ queries over dimension-table chains). Below the same
-    kind of size/byte gate `connected_components` already uses, the
-    distinct edge set is collected once and closed with a driver BFS;
-    the result SET is identical (min-id-free, order-free) and the
-    output schema is preserved. The distributed doubling loop remains
-    the path for closures that don't fit on the driver. Keyed
-    closures (`key_cols`) keep the distributed path — the keyed
-    callers are exactly the per-graph web-scale shapes."""
+    SPARQL p+ queries over dimension-table chains). Below the size/
+    byte gate it shares with `connected_components`, the distinct edge
+    set is collected once and closed with a driver BFS; the result SET
+    is identical (NULL endpoints included) and the output schema is
+    preserved. The BFS gives up once its pair set outgrows
+    `driver_max_bytes` (r06 ADVICE #2: a chain's closure is quadratic
+    in its edges), so the doubling loop stays the path for closures
+    that don't fit on the driver. Keyed closures (`key_cols`) keep
+    the distributed path — the keyed callers are exactly the
+    per-graph web-scale shapes."""
     keys = list(key_cols)
     closure = edges.select(*keys, "src", "dst").distinct().localCheckpoint()
-    # ONE stats job: the convergence count the doubling loop needs
-    # anyway, plus the byte estimate for the driver-path gate (two
-    # separate actions would double the per-job scheduling latency
-    # this fast path exists to avoid)
-    n_row = closure.agg(
-        F.count("*"),
-        F.avg(F.length(F.col("src").cast("string")) + F.length(F.col("dst").cast("string"))),
-    ).first()
-    prev_count, avg_len = n_row[0], n_row[1]
-    if not keys and prev_count <= driver_threshold:
-        if prev_count * ((avg_len or 16.0) + 96.0) <= driver_max_bytes:
-            rows = closure.collect()
-            adj: dict = {}
-            for r in rows:
-                adj.setdefault(r.src, set()).add(r.dst)
-            out = set()
-            for s, first in adj.items():
-                seen: set = set()
-                stack = list(first)
-                while stack:
-                    d = stack.pop()
-                    if d in seen:
-                        continue
+    # a -1 row budget keeps keyed closures distributed
+    prev_count, row_bytes, rows = _collect_if_small(
+        closure, -1 if keys else driver_threshold, driver_max_bytes
+    )
+    if rows is not None:
+        adj: dict = {}
+        for r in rows:
+            adj.setdefault(r.src, set()).add(r.dst)
+        out: set = set()
+        for s, first in adj.items():
+            seen: set = set()
+            stack = list(first)
+            while stack:
+                d = stack.pop()
+                if d not in seen:
                     seen.add(d)
-                    nxt = adj.get(d)
-                    if nxt:
-                        stack.extend(nxt)
-                out.update((s, d) for d in seen)
-            spark = edges.sparkSession
-            src_t = closure.schema["src"].dataType.simpleString()
-            dst_t = closure.schema["dst"].dataType.simpleString()
-            return spark.createDataFrame(
-                sorted(out), f"src {src_t}, dst {dst_t}"
+                    # NULL never satisfies the doubling join's a.dst =
+                    # b.src: a path ends at NULL, never passes through it
+                    if d is not None:
+                        stack.extend(adj.get(d, ()))
+            out.update((s, d) for d in seen)
+            # the pair set can be quadratic in the gated input edges
+            if len(out) * row_bytes > driver_max_bytes:
+                break
+        else:
+            return edges.sparkSession.createDataFrame(
+                sorted(out, key=lambda p: (p[0] is None, p[0], p[1] is None, p[1])),
+                closure.schema,
             )
     for _ in range(max_iterations):
         # doubling: paths = closure ∪ (closure ⋈ closure)
@@ -134,31 +197,12 @@ def seeded_closure(
     `edges`: (src, dst). `seeds`: one column named `seed`.
     Returns (seed, node) pairs — every node reachable from each seed.
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    frontier = (
-        seeds.select("seed")
-        .distinct()
-        .join(e, F.col("seed") == F.col("src"))
-        .select("seed", F.col("dst").alias("node"))
-        .distinct()
-        .localCheckpoint()
-    )
-    reached = frontier
-    for _ in range(max_iterations):
-        if frontier.count() == 0:
-            return reached
-        nxt = (
-            frontier.join(e, F.col("node") == F.col("src"))
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = nxt.join(reached, ["seed", "node"], "left_anti").localCheckpoint()
-        reached = reached.unionByName(frontier).localCheckpoint()
-    if frontier.count() == 0:
-        # converged exactly on the last allowed expansion
-        return reached
-    raise RuntimeError(
-        f"seeded_closure did not converge in {max_iterations} iterations"
+    return _frontier_bfs(
+        edges.select("src", "dst").distinct().localCheckpoint(),
+        seeds.select("seed", F.col("seed").alias("node")),
+        ("seed",),
+        max_iterations,
+        "seeded_closure",
     )
 
 
@@ -194,20 +238,8 @@ def connected_components(
     # driver-side limit() — a multi-million-row global limit funnels
     # everything through one task (measured 3× pipeline regression).
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    # ONE stats job for the size gate (count + byte estimate) instead
-    # of two sequential actions — per-job latency is the dominant cost
-    # of small-graph calls (r06)
-    stats = e.agg(
-        F.count("*"),
-        F.avg(F.length(F.col("src").cast("string")) + F.length(F.col("dst").cast("string"))),
-    ).first()
-    n_edges, avg_len = stats[0], stats[1]
-    fits_rows = n_edges <= driver_threshold
-    # byte-aware gate: long string ids shrink the row budget
-    est_row_bytes = (avg_len or 16.0) + 96.0  # python tuple/str overhead
-    fits_bytes = fits_rows and n_edges * est_row_bytes <= driver_max_bytes
-    if fits_rows and fits_bytes:
-        rows = e.collect()
+    _, _, rows = _collect_if_small(e, driver_threshold, driver_max_bytes)
+    if rows is not None:
         parent: dict = {}
 
         def find(x):
@@ -811,46 +843,7 @@ def _labeled_reach(
     partitions primitive `scc_fwbw` sweeps with (every recursion branch
     of FW-BW advances in the SAME Spark job, so the round count is the
     DEPTH of the recursion tree, not the number of branches)."""
-    # edge columns renamed apart: duplicate attribute names inside the
-    # join trip LogicalRDD's constraint rewrite on localCheckpoint
-    # (NoSuchElementException: key not found) in Spark 4
-    er = e.select(
-        F.col("_part").alias("_epart"),
-        F.col("src").alias("_esrc"),
-        F.col("dst").alias("_edst"),
-    )
-    frontier = (
-        seeds.join(
-            er,
-            (F.col("_part") == F.col("_epart")) & (F.col("node") == F.col("_esrc")),
-        )
-        .select("_part", F.col("_edst").alias("node"))
-        .distinct()
-        .localCheckpoint()
-    )
-    reached = frontier
-    for _ in range(max_iterations):
-        if frontier.count() == 0:
-            return reached
-        nxt = (
-            frontier.join(
-                er,
-                (F.col("_part") == F.col("_epart")) & (F.col("node") == F.col("_esrc")),
-            )
-            .select("_part", F.col("_edst").alias("node"))
-            .distinct()
-        )
-        frontier = (
-            nxt.join(reached, ["_part", "node"], "left_anti")
-            .select("_part", "node")
-            .localCheckpoint()
-        )
-        reached = (
-            reached.unionByName(frontier).select("_part", "node").localCheckpoint()
-        )
-    if frontier.count() == 0:
-        return reached
-    raise RuntimeError(f"_labeled_reach did not converge in {max_iterations} iterations")
+    return _frontier_bfs(e, seeds, ("_part",), max_iterations, "_labeled_reach")
 
 
 def scc_fwbw(
@@ -1398,36 +1391,14 @@ def reachable_set(
     so the working frame is one row per REACHED NODE even when the
     source set is a constant fraction of the graph (seeded_closure's
     (seed, node) pairs would go quadratic for Broder-core-sized seed
-    sets — the web bowtie's core is ~28% of all nodes). Plain frontier
-    BFS: per iteration one hash join frontier⋈edges + one anti-join
-    against the reached set, eager checkpoints cut lineage.
+    sets — the web bowtie's core is ~28% of all nodes).
 
     `sources`: one column named `node`. Returns distinct (node) rows.
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    frontier = (
-        sources.select("node")
-        .distinct()
-        .join(e, F.col("node") == F.col("src"))
-        .select(F.col("dst").alias("node"))
-        .distinct()
-        .localCheckpoint()
+    return _frontier_bfs(
+        edges.select("src", "dst").distinct().localCheckpoint(),
+        sources, (), max_iterations, "reachable_set",
     )
-    reached = frontier
-    for _ in range(max_iterations):
-        if frontier.count() == 0:
-            return reached
-        nxt = (
-            frontier.join(e, F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = nxt.join(reached, ["node"], "left_anti").localCheckpoint()
-        reached = reached.unionByName(frontier).localCheckpoint()
-    if frontier.count() == 0:
-        # converged exactly on the last allowed expansion
-        return reached
-    raise RuntimeError(f"reachable_set did not converge in {max_iterations} iterations")
 
 
 def bowtie_classes(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
@@ -1511,35 +1482,13 @@ def seeded_distances(
     `personalized_pagerank`'s mass-based one). Work ∝ the answer
     (frontier-sized joins), never all-pairs.
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    frontier = (
-        seeds.select("seed")
-        .distinct()
-        .join(e, F.col("seed") == F.col("src"))
-        .select("seed", F.col("dst").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(1))
-        .localCheckpoint()
-    )
-    reached = frontier
-    for t in range(2, max_iterations + 2):
-        if frontier.count() == 0:
-            return reached
-        nxt = (
-            frontier.join(e, F.col("node") == F.col("src"))
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .withColumn("dist", F.lit(t))
-        )
-        frontier = nxt.join(
-            reached, ["seed", "node"], "left_anti"
-        ).localCheckpoint()
-        reached = reached.unionByName(frontier).localCheckpoint()
-    if frontier.count() == 0:
-        # converged exactly on the last allowed expansion
-        return reached
-    raise RuntimeError(
-        f"seeded_distances did not converge in {max_iterations} iterations"
+    return _frontier_bfs(
+        edges.select("src", "dst").distinct().localCheckpoint(),
+        seeds.select("seed", F.col("seed").alias("node")),
+        ("seed",),
+        max_iterations,
+        "seeded_distances",
+        hop_col="dist",
     )
 
 

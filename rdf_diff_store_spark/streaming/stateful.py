@@ -29,24 +29,29 @@ def _latest_wins(
 ) -> Iterable[pd.DataFrame]:
     import hashlib
 
+    from rdf_diff_store_spark.functions.turtle import canonicalize
+
     if state.exists:
         cur_ts, cur_op, cur_hash = state.get
     else:
         cur_ts, cur_op, cur_hash = None, None, None
 
     accepted = []
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts")
-    for _, r in rows.iterrows():
-        op = r["op"]
-        payload = r.get("payload")
-        h = (
-            None
-            if op == "delete" or payload is None
-            else hashlib.sha256(str(payload).encode("utf-8")).hexdigest()
-        )
-        ts = r["ts"]
-        if cur_ts is not None and ts < cur_ts:
-            continue  # stale (late) update — latest-wins by event time
+    rows = pd.concat(list(pdfs), ignore_index=True)
+    # the batch store's content hash (sha2 of the canonical payload) and
+    # its (ts, op, hash) version order (operators/versioned.current_state),
+    # with a stable sort so equal keys keep arrival order
+    rows["h"] = [
+        None
+        if op == "delete" or payload is None
+        else hashlib.sha256(canonicalize(payload).encode("utf-8")).hexdigest()
+        for op, payload in zip(rows["op"], rows["payload"])
+    ]
+    rows["key_h"] = rows["h"].fillna("")
+    for _, r in rows.sort_values(["ts", "op", "key_h"], kind="stable").iterrows():
+        op, h, ts = r["op"], r["h"], r["ts"]
+        if cur_ts is not None and (ts, op, r["key_h"]) < (cur_ts, cur_op, cur_hash or ""):
+            continue  # stale (late) update — latest-wins by version order
         live = cur_op is not None and cur_op != "delete"
         if op == "delete" and not live:
             continue

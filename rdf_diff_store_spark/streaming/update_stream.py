@@ -29,12 +29,12 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-CHANGELOG_SCHEMA = (
-    "graph_id string, ts timestamp, op string, payload string, content_hash string"
-)
+from rdf_diff_store_spark.schemas import CHANGELOG
+from rdf_diff_store_spark.streaming.state import is_path_not_found
 
 
 class UpdateStreamApplier:
@@ -46,11 +46,15 @@ class UpdateStreamApplier:
         self.dir = os.path.join(work_dir, "changelog")
 
     def changelog(self) -> DataFrame:
-        if os.path.exists(os.path.join(self.dir, "_SUCCESS")) or any(
-            f.endswith(".parquet") for f in (os.listdir(self.dir) if os.path.isdir(self.dir) else [])
-        ):
-            return self.spark.read.schema(CHANGELOG_SCHEMA).parquet(self.dir)
-        return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
+        """The stored changelog. Read through Spark, not os.path, so a
+        `file:` or remote work_dir sees its history; only a missing
+        table means "no history yet", any other read failure raises."""
+        try:
+            return self.spark.read.schema(CHANGELOG).parquet(self.dir)
+        except AnalysisException as e:
+            if not is_path_not_found(e):
+                raise
+            return self.spark.createDataFrame([], CHANGELOG)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from rdf_diff_store_spark.plans.sparql_update import apply_update

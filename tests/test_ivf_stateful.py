@@ -34,9 +34,11 @@ def test_latest_state_stream(spark, tmp_path):
 
     src = str(tmp_path / "st_src")
     t = lambda s: dt.datetime.fromisoformat(s)  # noqa: E731
+    # payloads are Turtle: the stream hashes their canonical form
+    doc = lambda o: f'<http://e/s> <http://e/p> "{o}" .'  # noqa: E731
     batch1 = [
-        ("g1", t("2024-01-01 00:00:00"), "add", "doc-a", "text/turtle"),
-        ("g1", t("2024-01-01 00:01:00"), "add", "doc-a", "text/turtle"),  # resend → skip
+        ("g1", t("2024-01-01 00:00:00"), "add", doc("a"), "text/turtle"),
+        ("g1", t("2024-01-01 00:01:00"), "add", doc("a"), "text/turtle"),  # resend → skip
         ("g2", t("2024-01-01 00:00:30"), "delete", None, "text/turtle"),  # delete of missing → skip
     ]
     # single file per append: a multi-file append can be LISTED partially
@@ -56,8 +58,8 @@ def test_latest_state_stream(spark, tmp_path):
     q.processAllAvailable()
     # batch 2: change g1, then delete it; late stale row ignored
     batch2 = [
-        ("g1", t("2024-01-01 00:05:00"), "add", "doc-b", "text/turtle"),
-        ("g1", t("2024-01-01 00:02:00"), "add", "doc-zzz", "text/turtle"),  # stale (< state ts after doc-b? no: processed in ts order within batch)
+        ("g1", t("2024-01-01 00:05:00"), "add", doc("b"), "text/turtle"),
+        ("g1", t("2024-01-01 00:02:00"), "add", doc("zzz"), "text/turtle"),  # stale (< state ts after doc-b? no: processed in ts order within batch)
         ("g1", t("2024-01-01 00:06:00"), "delete", None, "text/turtle"),
     ]
     spark.createDataFrame(batch2, GRAPH_UPDATES).coalesce(1).write.mode(
@@ -74,6 +76,65 @@ def test_latest_state_stream(spark, tmp_path):
     assert ops == [("g1", "add"), ("g1", "add"), ("g1", "add"), ("g1", "delete")]
     hashes = [r.content_hash for r in rows]
     assert hashes[-1] is None and len({h for h in hashes if h}) == 3
+
+
+class _State:
+    """GroupState stand-in: no prior state; keeps the final update."""
+
+    exists = False
+
+    def update(self, value):
+        self.value = value
+
+
+def _stream_vs_store(spark, rows):
+    """Final `_latest_wins` state of one micro-batch vs the batch
+    store's `current_state(append_updates(...))` of the same rows."""
+    import pandas as pd
+
+    from rdf_diff_store_spark.operators.versioned import append_updates, current_state
+    from rdf_diff_store_spark.schemas import CHANGELOG, GRAPH_UPDATES
+    from rdf_diff_store_spark.streaming.stateful import _latest_wins
+
+    state = _State()
+    pdf = pd.DataFrame(rows, columns=["graph_id", "ts", "op", "payload", "format"])
+    list(_latest_wins(("g1",), [pdf], state))
+    store = current_state(
+        append_updates(
+            spark.createDataFrame([], CHANGELOG),
+            spark.createDataFrame(rows, GRAPH_UPDATES),
+        )
+    ).first()
+    return state.value, (store.ts, store.op, store.content_hash)
+
+
+def test_latest_wins_same_ts_orders_like_store(spark):
+    import hashlib
+
+    from rdf_diff_store_spark.functions.turtle import canonicalize
+
+    t = dt.datetime(2024, 1, 1)
+    docs = [f'<http://e/s> <http://e/p> "{o}" .' for o in "ab"]
+    # two same-ts adds arriving in DESCENDING content-hash order
+    hashed = sorted(
+        docs,
+        key=lambda d: hashlib.sha256(canonicalize(d).encode()).hexdigest(),
+        reverse=True,
+    )
+    rows = [("g1", t, "add", d, "text/turtle") for d in hashed]
+    stream, store = _stream_vs_store(spark, rows)
+    assert stream == store
+
+
+def test_latest_wins_skips_non_canonical_resend_like_store(spark):
+    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    rows = [
+        ("g1", t1, "add", '<http://e/s> <http://e/p> "a" .', "text/turtle"),
+        # the same graph, re-sent in non-canonical Turtle
+        ("g1", t2, "add", '@prefix e: <http://e/> .\ne:s  e:p "a", "a" .', "text/turtle"),
+    ]
+    stream, store = _stream_vs_store(spark, rows)
+    assert stream == store
 
 
 def test_trained_centroids_beat_random_on_clustered_data(spark):

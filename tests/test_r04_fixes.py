@@ -59,9 +59,9 @@ class TestClearDefaultNamed:
 
     def _store(self, spark):
         from rdf_diff_store_spark.plans.sparql_update import apply_update
-        from rdf_diff_store_spark.streaming.update_stream import CHANGELOG_SCHEMA
+        from rdf_diff_store_spark.schemas import CHANGELOG
 
-        log = spark.createDataFrame([], CHANGELOG_SCHEMA)
+        log = spark.createDataFrame([], CHANGELOG)
         return apply_update(
             log,
             'INSERT DATA { <http://e/s> <http://e/p> "default-row" . '

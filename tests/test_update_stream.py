@@ -136,3 +136,18 @@ class TestUpdateStream:
         assert log.filter("graph_id = 'g:1'").count() == 2
         trip = {r.obj for r in snapshot_triples(log, T9).collect()}
         assert trip == {"a", "b"}
+
+    def test_file_uri_work_dir_keeps_history(self, spark, tmp_path):
+        """A `file:` work_dir is read through Spark: the second batch
+        folds against the stored first one, so both triples survive
+        (an os.path check read such a store as empty)."""
+        app = UpdateStreamApplier(spark, f"file:{tmp_path}")
+        for i, (ts, obj) in enumerate([(T1, "a"), (T2, "b")]):
+            app.process_batch(
+                _reqs(spark, [
+                    (ts, 'INSERT DATA { GRAPH <g:1> { <http://e/s> <http://e/p> "%s" } }' % obj),
+                ]),
+                i,
+            )
+        trip = {r.obj for r in snapshot_triples(app.changelog(), T9).collect()}
+        assert trip == {"a", "b"}
