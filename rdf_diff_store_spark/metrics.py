@@ -13,7 +13,6 @@ the work_dir so a resumed run can audit what previous attempts did.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,12 +20,14 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rdf_diff_store_spark.functions.text import EXTRACTOR_VERSION
+from rdf_diff_store_spark.streaming.state import HadoopFS
 
 
 class StageRecorder:
     def __init__(self, spark: SparkSession, work_dir: str | None = None):
         self.spark = spark
         self.work_dir = work_dir
+        self._fs = HadoopFS(spark) if work_dir else None
         self.metrics: list[dict] = []
         self.lineage: list[dict] = []
         self._cached: list[DataFrame] = []
@@ -39,9 +40,8 @@ class StageRecorder:
         downstream as-of reads prune files."""
         t0 = time.perf_counter()
         if self.work_dir:
-            path = os.path.join(self.work_dir, name)
-            marker = os.path.join(path, "_SUCCESS")
-            if os.path.exists(marker):
+            path = f"{self.work_dir}/{name}"
+            if self._fs.exists(f"{path}/_SUCCESS"):
                 out = self.spark.read.parquet(path)
                 self._record(name, out, t0, resumed=True)
                 return out
@@ -99,8 +99,8 @@ class StageRecorder:
         self.spark.createDataFrame(
             [tuple(m.values()) for m in self.metrics],
             "stage string, rows long, n_partitions int, wall_sec double, resumed boolean, extractor_version string",
-        ).write.mode("append").parquet(os.path.join(self.work_dir, "_metrics"))
+        ).write.mode("append").parquet(f"{self.work_dir}/_metrics")
         self.spark.createDataFrame(
             [tuple(l.values()) for l in self.lineage],
             "stage string, partition_id int, rows long",
-        ).write.mode("append").parquet(os.path.join(self.work_dir, "_lineage"))
+        ).write.mode("append").parquet(f"{self.work_dir}/_lineage")

@@ -39,6 +39,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rdf_diff_store_spark.streaming.state import read_or_empty
+
 
 class StreamingIndex:
     """foreachBatch processor: feed it (doc_id, text) micro-batches,
@@ -62,19 +64,12 @@ class StreamingIndex:
         self._mark_path = os.path.join(work_dir, "index_batchmark")
 
     def _read_mark(self) -> int:
-        try:
-            row = self.spark.read.parquet(self._mark_path).first()
-            return -1 if row is None else row["batch_id"]
-        except Exception:  # noqa: BLE001 — first batch: no mark yet
-            return -1
+        row = read_or_empty(self.spark, self._mark_path, "batch_id long").first()
+        return -1 if row is None else row["batch_id"]  # -1: no mark yet
 
     def state(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self._state_path)
-        except Exception:  # noqa: BLE001 — empty index
-            return self.spark.createDataFrame(
-                [], "term string, df long, cf long, postings array<long>"
-            )
+        schema = "term string, df long, cf long, postings array<long>"
+        return read_or_empty(self.spark, self._state_path, schema)
 
     def _batch_index(self, batch: DataFrame) -> DataFrame:
         # the two-stage build of operators/index.py::inverted_index,

@@ -13,10 +13,13 @@ Mechanics mirror streaming/ingest.py's exactly-once pattern:
 
 * ``{out_dir}/batch-sN/``       — the batch's ACCEPTED documents
 * ``{out_dir}__bands/batch-sN/`` — the band hashes those documents
-  claimed (append-only; the union of these dirs IS the filter state)
-* a per-batch content fingerprint recorded next to the band dir makes
-  committed-batch replays no-ops; a crash before the band commit
-  replays into the same dirs (same pre-state → same decisions).
+  claimed (append-only; the union of these dirs up to the latest
+  committed N IS the filter state)
+* ``{out_dir}__bands/_commits/N`` — the one commit point, written
+  last and atomically (streaming/state.py::CommitLog): the batch's
+  content fingerprint. No record N → a replay reads the same state and
+  rewrites the same dirs (same pre-state → same decisions); record N
+  with the replay's fingerprint → the replay is skipped.
 
 Per-batch cost: O(batch × bands) new state rows written, one semi
 join of the batch's band rows against the accumulated state (at
@@ -26,11 +29,11 @@ batch side broadcast — the scan prunes to the batch's buckets).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from rdf_diff_store_spark.streaming.state import CommitLog
 
 _EMPTY_BANDS_SCHEMA = "band int, band_hash long"
 
@@ -52,32 +55,21 @@ class StreamingNearDupFilter:
         self.bands = bands
         self.id_col = id_col
         self.text_col = text_col
+        self.log = CommitLog(spark, f"{self.bands_dir}/_commits")
 
     # -- state ----------------------------------------------------------
     def _latest_version(self) -> int | None:
-        if not os.path.isdir(self.bands_dir):
-            return None
-        vs = [
-            int(d.split("-s", 1)[1])
-            for d in os.listdir(self.bands_dir)
-            if d.startswith("batch-s")
-            # partial (crashed) writes lack _SUCCESS — not committed
-            and os.path.exists(os.path.join(self.bands_dir, d, "_SUCCESS"))
-        ]
-        return max(vs) if vs else None
+        return self.log.latest()
 
     def _read_state(self, upto: int | None) -> DataFrame:
         if upto is None:
             return self.spark.createDataFrame([], _EMPTY_BANDS_SCHEMA)
-        paths = [
-            os.path.join(self.bands_dir, d)
-            for d in os.listdir(self.bands_dir)
-            if d.startswith("batch-s") and int(d.split("-s", 1)[1]) <= upto
-        ]
         # schema inferred from the files: _id's type follows id_col
         # (long doc ids, string urls, ...) — a hardcoded schema would
         # break the read for any non-long id
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.parquet(
+            *(f"{self.bands_dir}/batch-s{n}" for n in range(upto + 1))
+        )
 
     def read_kept(self) -> DataFrame:
         return (
@@ -100,16 +92,8 @@ class StreamingNearDupFilter:
             ).alias("h"),
         ).first()
         fp = f"{fp_row.n}:{fp_row.h}"
-        if v is not None:
-            try:
-                with open(
-                    os.path.join(self.bands_dir, f"batch-s{v}", "_batch_fp"),
-                    encoding="ascii",
-                ) as fh:
-                    if fh.read() == fp:
-                        return  # committed replay
-            except OSError:
-                pass
+        if v is not None and self.log.read(v)["fp"] == fp:
+            return  # committed replay
 
         sh = shingle_frame(batch, id_col=self.id_col, text_col=self.text_col)
         rows = band_rows_frame(sh, self.num_hashes, self.bands).localCheckpoint()
@@ -161,17 +145,15 @@ class StreamingNearDupFilter:
         kept = batch.join(
             dups.withColumnRenamed("_id", self.id_col), self.id_col, "left_anti"
         )
-        kept_path = os.path.join(self.out_dir, f"batch-s{new_v}")
+        kept_path = f"{self.out_dir}/batch-s{new_v}"
         kept.write.mode("overwrite").parquet(kept_path)
         # only ACCEPTED docs claim buckets
         kept_ids = self.spark.read.parquet(kept_path).select(
             F.col(self.id_col).alias("_id")
         )
         kept_bands = rows.join(kept_ids, "_id", "left_semi")
-        bands_path = os.path.join(self.bands_dir, f"batch-s{new_v}")
-        kept_bands.write.mode("overwrite").parquet(bands_path)
-        with open(os.path.join(bands_path, "_batch_fp"), "w", encoding="ascii") as fh:
-            fh.write(fp)
+        kept_bands.write.mode("overwrite").parquet(f"{self.bands_dir}/batch-s{new_v}")
+        self.log.commit(new_v, {"fp": fp})
 
     def start(
         self, docs_stream: DataFrame, checkpoint_dir: str, trigger_seconds: int = 60

@@ -27,6 +27,7 @@ from rdf_diff_store_spark.operators.sketch import (
     countmin_estimate,
     countmin_merge,
 )
+from rdf_diff_store_spark.streaming.state import read_or_empty
 
 
 class StreamingHeavyHitters:
@@ -51,19 +52,13 @@ class StreamingHeavyHitters:
         self._mark_path = os.path.join(work_dir, "cm_batchmark")
 
     def _read_mark(self) -> int:
-        try:
-            row = self.spark.read.parquet(self._mark_path).first()
-            return -1 if row is None else row["batch_id"]
-        except Exception:  # noqa: BLE001 — first batch: no mark yet
-            return -1
+        row = read_or_empty(self.spark, self._mark_path, "batch_id long").first()
+        return -1 if row is None else row["batch_id"]  # -1: no mark yet
 
     def counters(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self._counters_path)
-        except Exception:  # noqa: BLE001 — empty sketch
-            return self.spark.createDataFrame(
-                [], "r int, bucket long, counter long"
-            )
+        return read_or_empty(
+            self.spark, self._counters_path, "r int, bucket long, counter long"
+        )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if batch_id <= self._read_mark():
@@ -129,10 +124,7 @@ class StreamingDistinct:
         return f"{groups}reg int, maxrank int"
 
     def registers(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self._regs_path)
-        except Exception:  # noqa: BLE001 — empty sketch
-            return self.spark.createDataFrame([], self._schema())
+        return read_or_empty(self.spark, self._regs_path, self._schema())
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from rdf_diff_store_spark.operators.sketch import (

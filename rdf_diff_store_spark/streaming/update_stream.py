@@ -29,12 +29,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_diff_store_spark.schemas import CHANGELOG
-from rdf_diff_store_spark.streaming.state import is_path_not_found
+from rdf_diff_store_spark.streaming.state import read_or_empty
 
 
 class UpdateStreamApplier:
@@ -49,12 +48,9 @@ class UpdateStreamApplier:
         """The stored changelog. Read through Spark, not os.path, so a
         `file:` or remote work_dir sees its history; only a missing
         table means "no history yet", any other read failure raises."""
-        try:
-            return self.spark.read.schema(CHANGELOG).parquet(self.dir)
-        except AnalysisException as e:
-            if not is_path_not_found(e):
-                raise
-            return self.spark.createDataFrame([], CHANGELOG)
+        return read_or_empty(
+            self.spark, self.dir, CHANGELOG, self.spark.read.schema(CHANGELOG)
+        )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from rdf_diff_store_spark.plans.sparql_update import apply_update

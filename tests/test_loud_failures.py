@@ -88,3 +88,54 @@ def test_scan_partition_cache_keys_on_session(spark, sf_dir, monkeypatch):
     n = relational._scan_partitions(ev, sf_dir, "events")
     assert n == ev.rdd.getNumPartitions()
     assert relational._SCAN_PARTS[(app, sf_dir, "events")] == n
+
+
+def _truncate_parquet(d):
+    """Cut every parquet file under `d` in half (its footer goes) and
+    drop the checksum sidecars, so the read fails in the parquet
+    reader itself."""
+    for f in d.rglob("*.parquet"):
+        f.write_bytes(f.read_bytes()[: f.stat().st_size // 2])
+    for crc in d.rglob(".*.crc"):
+        crc.unlink()
+
+
+def test_sketch_sink_state_reads_only_missing_as_empty(spark, tmp_path):
+    from rdf_diff_store_spark.streaming.sketch_stream import (
+        StreamingDistinct,
+        StreamingHeavyHitters,
+    )
+
+    toks = spark.createDataFrame([("a",), ("b",), ("a",)], "tok string")
+    hh = StreamingHeavyHitters(spark, str(tmp_path / "hh"))
+    assert hh._read_mark() == -1 and hh.counters().count() == 0
+    hh.process_batch(toks, 0)
+    _truncate_parquet(tmp_path / "hh" / "cm_counters")
+    with pytest.raises(Exception):
+        hh.counters().collect()
+    _truncate_parquet(tmp_path / "hh" / "cm_batchmark")
+    with pytest.raises(Exception):
+        hh._read_mark()
+
+    vals = spark.createDataFrame([("x",), ("y",)], "v string")
+    sd = StreamingDistinct(spark, str(tmp_path / "sd"))
+    assert sd.registers().count() == 0
+    sd.process_batch(vals, 0)
+    _truncate_parquet(tmp_path / "sd" / "hll_registers")
+    with pytest.raises(Exception):
+        sd.registers().collect()
+
+
+def test_index_sink_state_reads_only_missing_as_empty(spark, tmp_path):
+    from rdf_diff_store_spark.streaming.index_stream import StreamingIndex
+
+    docs = spark.createDataFrame([(1, "a b"), (2, "b c")], "doc_id long, text string")
+    ix = StreamingIndex(spark, str(tmp_path / "ix"))
+    assert ix._read_mark() == -1 and ix.state().count() == 0
+    ix.process_batch(docs, 0)
+    _truncate_parquet(tmp_path / "ix" / "index_state")
+    with pytest.raises(Exception):
+        ix.state().collect()
+    _truncate_parquet(tmp_path / "ix" / "index_batchmark")
+    with pytest.raises(Exception):
+        ix._read_mark()

@@ -341,24 +341,33 @@ class TestBucketedStreamingState:
         g0 = state.filter(F.col("graph_id") == "g0").first()
         assert "new" in g0.payload
 
-    def test_manifest_fast_path_matches_walk(self, spark, tmp_path):
-        """The per-version bucket manifest must resolve identically to
-        the directory walk, and a deleted manifest must fall back."""
+    def test_uncommitted_version_is_invisible(self, spark, tmp_path, monkeypatch):
+        """`v-N/` and `batch-sN/` complete on disk but no commit record:
+        version N does not exist, and the next batch commits as N."""
         import os
 
         from rdf_diff_store_spark.streaming.ingest import StreamingChangelogWriter
+        from rdf_diff_store_spark.streaming.state import CommitLog
 
         table = str(tmp_path / "log")
         w = StreamingChangelogWriter(spark, table, n_buckets=4)
         ttl = '<http://e/{0}> <http://e/p> "{0}" .'
-        for i, batch in enumerate([[0, 1, 2, 3, 4, 5], [0], [1, 2]]):
-            rows = [(f"g{g}", f"2024-01-0{i+1} 00:00:00", "add", ttl.format(f"{g}.{i}")) for g in batch]
-            w.process_batch(self._updates(spark, rows), i)
-        via_manifest = w._bucket_versions(2)
-        os.remove(os.path.join(w.state_dir, "v-2", "_manifest"))
-        via_walk = w._bucket_versions(2)
-        assert via_manifest == via_walk
-        assert w._read_state(2).count() == 6  # all graphs resolved
+        rows = lambda gs, day: [  # noqa: E731
+            (f"g{g}", f"2024-01-0{day} 00:00:00", "add", ttl.format(f"{g}.{day}")) for g in gs
+        ]
+        w.process_batch(self._updates(spark, rows([0, 1], 1)), 0)
+        with monkeypatch.context() as m:
+            m.setattr(CommitLog, "commit", lambda self, n, record: None)
+            w.process_batch(self._updates(spark, rows([2, 3], 2)), 1)
+        for d in (f"{table}/batch-s1", f"{w.state_dir}/v-1"):
+            assert os.path.exists(f"{d}/_SUCCESS")
+        w = StreamingChangelogWriter(spark, table)
+        assert w._latest_state_version() == 0
+        assert w._read_state(0).count() == 2
+        w.process_batch(self._updates(spark, rows([4], 3)), 1)
+        assert w._latest_state_version() == 1
+        got = sorted(r.graph_id for r in w.read_changelog().collect())
+        assert got == ["g0", "g1", "g4"]  # the uncommitted batch is gone
 
     def test_changed_bucket_count_on_restart_is_ignored(self, spark, tmp_path):
         from rdf_diff_store_spark.streaming.ingest import StreamingChangelogWriter
