@@ -32,7 +32,7 @@ bulk load beats per-graph parsing (reference: src/query.rs:132-134).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -424,7 +424,9 @@ _TRIPLES_OUT_SCHEMA = (
 _FAST_NT_RE = re.compile(r'^<([^>\\]*)> <([^>\\]*)> (?:<([^>\\]*)>|"([^"\\]*)") \.$')
 
 
-def parse_triples(changelog: DataFrame, passthrough: str | None = None) -> DataFrame:
+def parse_triples(
+    changelog: DataFrame, passthrough: str | Sequence[str] | None = None
+) -> DataFrame:
     """Explode canonical payloads into triple rows.
 
     mapInPandas bulk parse — the Spark translation of the reference's
@@ -435,19 +437,22 @@ def parse_triples(changelog: DataFrame, passthrough: str | None = None) -> DataF
     Input: changelog-like rows (graph_id, ts, payload[, ...]).
     Output: (graph_id, ts, subj, pred, obj, obj_dt, obj_lang).
 
-    `passthrough` names an optional INT column copied verbatim onto
-    every emitted triple — diff() tags each payload with its side so
-    BOTH snapshots parse in one mapInPandas pass instead of two.
+    `passthrough` names input columns (one name or a list, any type)
+    copied verbatim onto every emitted triple — diff() tags each
+    payload with its side so BOTH snapshots parse in one mapInPandas
+    pass, and the as-of index carries each version's `valid_to`
+    without a join.
     """
+    extra = [passthrough] if isinstance(passthrough, str) else list(passthrough or ())
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        cols = ("graph_id", "ts", "subj", "pred", "obj", "obj_dt", "obj_lang")
         for pdf in batches:
             pl = pdf["payload"]
             nn_pos = np.flatnonzero(pl.notna().to_numpy())
-            frames: list[pd.DataFrame] = []
+            # per path: (batch row of each triple, subj, pred, obj, obj_dt, obj_lang)
+            parts: list[tuple] = []
             fallback_pos: list[int] = []
             if len(nn_pos):
                 docs = pl.iloc[nn_pos]
@@ -472,56 +477,44 @@ def parse_triples(changelog: DataFrame, passthrough: str | None = None) -> DataF
                 good_line = matched & ~np.isin(rep, bad_local)
                 if good_line.any():
                     sel = np.flatnonzero(good_line)
-                    row_pos = nn_pos[rep[sel]]  # batch row per fast triple
                     iri_obj = m[2].notna().to_numpy()[sel]
-                    fast = pd.DataFrame(
-                        {
-                            "graph_id": pdf["graph_id"].to_numpy()[row_pos],
-                            "ts": pdf["ts"].to_numpy()[row_pos],
-                            "subj": m[0].to_numpy()[sel],
-                            "pred": m[1].to_numpy()[sel],
-                            "obj": np.where(
-                                iri_obj, m[2].to_numpy()[sel], m[3].to_numpy()[sel]
-                            ),
-                            "obj_dt": np.where(iri_obj, None, _XSD_STRING),
-                            "obj_lang": np.full(len(sel), None, dtype=object),
-                        }
-                    )
-                    if passthrough:
-                        fast[passthrough] = pdf[passthrough].to_numpy()[row_pos]
-                    frames.append(fast)
+                    parts.append((
+                        nn_pos[rep[sel]],
+                        m[0].to_numpy()[sel],
+                        m[1].to_numpy()[sel],
+                        np.where(iri_obj, m[2].to_numpy()[sel], m[3].to_numpy()[sel]),
+                        np.where(iri_obj, None, _XSD_STRING),
+                        np.full(len(sel), None, dtype=object),
+                    ))
             if fallback_pos:
-                out: dict[str, list] = {k: [] for k in cols}
-                if passthrough:
-                    out[passthrough] = []
-                extra = pdf[passthrough] if passthrough else None
-                for i in fallback_pos:
-                    gid = pdf["graph_id"].iloc[i]
-                    ts = pdf["ts"].iloc[i]
-                    parsed_rows = parse_turtle(pl.iloc[i])
-                    if passthrough:
-                        out[passthrough].extend([extra.iloc[i]] * len(parsed_rows))
-                    for s, p, o, dt, lang in parsed_rows:
-                        out["graph_id"].append(gid)
-                        out["ts"].append(ts)
-                        out["subj"].append(s)
-                        out["pred"].append(p)
-                        out["obj"].append(o)
-                        out["obj_dt"].append(dt)
-                        out["obj_lang"].append(lang)
-                frames.append(pd.DataFrame(out))
-            if frames:
-                pdf_out = pd.concat(frames, ignore_index=True)
+                rows = [(i, *t) for i in fallback_pos for t in parse_turtle(pl.iloc[i])]
+                if rows:
+                    cols = list(zip(*rows))
+                    parts.append((
+                        np.asarray(cols[0], dtype=np.int64),
+                        *(np.asarray(c, dtype=object) for c in cols[1:]),
+                    ))
+            if parts:
+                pos, *terms = (np.concatenate(c) for c in zip(*parts))
             else:
-                pdf_out = pd.DataFrame({k: [] for k in cols} | ({passthrough: []} if passthrough else {}))
-            # all-null ts infers float64, which Arrow can't cast to
-            # timestamp — coerce explicitly
-            pdf_out["ts"] = pd.to_datetime(pdf_out["ts"])
-            yield pdf_out
+                pos, terms = np.zeros(0, dtype=np.int64), [np.empty(0, dtype=object)] * 5
+            out = pd.DataFrame(
+                {
+                    "graph_id": pdf["graph_id"].to_numpy()[pos],
+                    # all-null ts infers float64, which Arrow can't cast
+                    # to timestamp — coerce explicitly
+                    "ts": pd.to_datetime(pdf["ts"].to_numpy()[pos]),
+                    **dict(zip(("subj", "pred", "obj", "obj_dt", "obj_lang"), terms)),
+                }
+            )
+            for c in extra:
+                out[c] = pdf[c].to_numpy()[pos]
+            yield out
 
-    sel = ["graph_id", "ts", "payload"] + ([passthrough] if passthrough else [])
-    schema = _TRIPLES_OUT_SCHEMA + (f", {passthrough} int" if passthrough else "")
-    return changelog.select(*sel).mapInPandas(_parse, schema)
+    schema = _TRIPLES_OUT_SCHEMA + "".join(
+        f", `{c}` {changelog.schema[c].dataType.simpleString()}" for c in extra
+    )
+    return changelog.select("graph_id", "ts", "payload", *extra).mapInPandas(_parse, schema)
 
 
 def serialize_graph(triples: DataFrame) -> DataFrame:

@@ -31,14 +31,39 @@ Spark design notes (scale):
   *current* content hash per graph — broadcastable when the batch's
   touched graph set is small, shuffle hash join otherwise (Catalyst
   decides; we only declare the plan).
+* As-of index (the reference's query-service LRU caches,
+  src/query.rs:29-99): `snapshot_at`, `snapshot_triples` and `diff`
+  count their requests per source and per half of the index they
+  need. A changelog whose analyzed plan reads only listed files is
+  keyed by (applicationId, semanticHash, every file's path, length and
+  modification time). A half's first request derives the answer as
+  above; its second builds that half, once, persisted: `versions`
+  (`version_intervals` minus empty intervals) or `triples` (their
+  parse, each triple carrying its interval). That request and every
+  later one is a filter on `valid_from <= t < valid_to` — no window,
+  no max_by shuffle, no Python. A key superseded by a file change
+  (a rewrite, or a commit that adds files), evicted by the LRU bound
+  or left by another application drops its index; when a build served
+  fewer than four hits before its files changed, the source's next key
+  derives twice as many requests before it builds. The
+  branch taken is the Spark local property `graft.branch`
+  (asof_derive | asof_build | asof_hit), set on the calling thread by
+  each request and left there until the next one, so the jobs that run
+  a request's plan carry it into the event log. `snapshots_at`, `version_deltas`,
+  `expire_versions` and `metadata` always derive.
 """
 
 from __future__ import annotations
 
+import re
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from rdf_diff_store_spark.functions.turtle import canonicalize_udf
+from rdf_diff_store_spark.functions.turtle import canonicalize_udf, parse_triples
+from rdf_diff_store_spark.operators.caching import _LRU
 
 TOMBSTONE = "delete"
 
@@ -200,17 +225,31 @@ def compact_changelog(changelog: DataFrame) -> DataFrame:
     )
 
 
+def _timestamp(ts: str | Column) -> Column:
+    return F.lit(ts).cast("timestamp") if isinstance(ts, str) else ts
+
+
 def snapshot_at(changelog: DataFrame, ts: str | Column) -> DataFrame:
     """O-06 + O-07: graph state as of `ts` (inclusive).
 
+    Derived (a source's first snapshot request, or a source the as-of
+    index cannot key):
     filter(ts <= t)          — partition pruning ≙ binary search
     max_by per graph         — latest-wins
     drop tombstones          — delete semantics
+    From the source's as-of index (from its second snapshot request on,
+    while its files stay unchanged): the versions whose interval holds
+    t, one filter over the persisted index.
     If ts precedes all history the result is empty, matching
     checkout_timestamp's Err(0) → empty-store behavior
     (src/git.rs:157-158).
     """
-    t = F.lit(ts).cast("timestamp") if isinstance(ts, str) else ts
+    t = _timestamp(ts)
+    index = _ASOF.request(changelog, "versions")
+    return index.snapshot(t) if index else _derived_snapshot(changelog, t)
+
+
+def _derived_snapshot(changelog: DataFrame, t: Column) -> DataFrame:
     return (
         current_state(_as_of_filter(changelog, t))
         .filter(F.col("op") != TOMBSTONE)
@@ -220,11 +259,12 @@ def snapshot_at(changelog: DataFrame, ts: str | Column) -> DataFrame:
 
 def snapshot_triples(changelog: DataFrame, ts: str | Column) -> DataFrame:
     """Snapshot expanded to triples (the store the reference queries:
-    src/query.rs:117-145). Bulk mapInPandas parse over the snapshot's
-    canonical payloads."""
-    from rdf_diff_store_spark.functions.turtle import parse_triples
-
-    return parse_triples(snapshot_at(changelog, ts))
+    src/query.rs:117-145). Derived: bulk mapInPandas parse over the
+    snapshot's canonical payloads. From the as-of index: a filter over
+    the triples it parsed once."""
+    t = _timestamp(ts)
+    index = _ASOF.request(changelog, "triples")
+    return index.snapshot_triples(t) if index else parse_triples(_derived_snapshot(changelog, t))
 
 
 def _dual_state(changelog: DataFrame, t1: Column, t2: Column) -> DataFrame:
@@ -249,19 +289,27 @@ def _dual_state(changelog: DataFrame, t1: Column, t2: Column) -> DataFrame:
 def diff(changelog: DataFrame, t1: str | Column, t2: str | Column, *, on_triples: bool = True) -> DataFrame:
     """O-08: added/removed between snapshot(t1) and snapshot(t2).
 
-    Single-scan dual-state aggregation (see _dual_state), then:
+    Derived: single-scan dual-state aggregation (see _dual_state), then:
     * graph-level: live-state hash comparison per graph — no join at
       all (the states are already co-grouped).
     * triple-level: only graphs whose content hash CHANGED between t1
       and t2 are parsed (mapInPandas Turtle parse is the expensive
-      step; unchanged graphs can't contribute diff rows), then
-      bidirectional anti-joins on the triple key within that reduced
-      set (north_rule's sort-merge anti-joins).
+      step; unchanged graphs can't contribute diff rows), then one
+      side-flag aggregation on the triple key.
+    From the as-of index: the versions (graph-level) or triples
+    (triple-level) live at t1 or t2, one filter, then the same
+    per-graph hash comparison or side-flag aggregation — no parse.
 
     Returns rows tagged with `change` ∈ {'added','removed'}.
     """
-    c1 = F.lit(t1).cast("timestamp") if isinstance(t1, str) else t1
-    c2 = F.lit(t2).cast("timestamp") if isinstance(t2, str) else t2
+    c1, c2 = _timestamp(t1), _timestamp(t2)
+    index = _ASOF.request(changelog, "triples" if on_triples else "versions")
+    if index:
+        return index.diff(c1, c2, on_triples)
+    return _derived_diff(changelog, c1, c2, on_triples)
+
+
+def _derived_diff(changelog: DataFrame, c1: Column, c2: Column, on_triples: bool) -> DataFrame:
     dual = _dual_state(changelog, c1, c2)
     live1 = F.col("s1").isNotNull() & (F.col("s1.op") != TOMBSTONE)
     live2 = F.col("s2").isNotNull() & (F.col("s2.op") != TOMBSTONE)
@@ -269,13 +317,7 @@ def diff(changelog: DataFrame, t1: str | Column, t2: str | Column, *, on_triples
     h2 = F.when(live2, F.col("s2.content_hash"))
 
     if not on_triples:
-        added = dual.filter(h2.isNotNull() & (h1.isNull() | (h1 != h2))).select(
-            "graph_id", F.col("s2.content_hash").alias("content_hash"), F.lit("added").alias("change")
-        )
-        removed = dual.filter(h1.isNotNull() & (h2.isNull() | (h1 != h2))).select(
-            "graph_id", F.col("s1.content_hash").alias("content_hash"), F.lit("removed").alias("change")
-        )
-        return added.unionByName(removed)
+        return _graph_changes(dual.select("graph_id", h1.alias("h1"), h2.alias("h2")))
 
     changed = dual.filter(
         ~(h1.isNull() & h2.isNull()) & ~h1.eqNullSafe(h2)
@@ -284,8 +326,6 @@ def diff(changelog: DataFrame, t1: str | Column, t2: str | Column, *, on_triples
         F.when(live1, F.col("s1.payload")).alias("payload1"),
         F.when(live2, F.col("s2.payload")).alias("payload2"),
     )
-    from rdf_diff_store_spark.functions.turtle import parse_triples
-
     # ONE mapInPandas pass parses BOTH sides (r02 VERDICT wrong #4:
     # the old form ran two separate parses over the same `changed`
     # frame — double the Python cost of the most expensive versioned
@@ -297,24 +337,48 @@ def diff(changelog: DataFrame, t1: str | Column, t2: str | Column, *, on_triples
         F.posexplode(F.array("payload1", "payload2")).alias("_side", "payload"),
     )
     parsed = parse_triples(stacked, passthrough="_side")
-    # The triple identity key includes datatype and language tag:
-    # "hello"@en → "hello"@de is one removed + one added triple in the
-    # reference (git diff of canonical N-Triples, which serialize
-    # @lang/^^dt), and an IRI object is distinct from a plain literal
-    # with the same lexical form. groupBy treats NULL keys as equal, so
-    # no sentinel coalescing is needed. One aggregation shuffle (with
-    # map-side partial agg) replaces the old pair of anti-joins — and a
-    # graph is a SET of triples, so the grouping's dedup is exact.
-    key = ["graph_id", "subj", "pred", "obj", "obj_dt", "obj_lang"]
-    return (
-        parsed.groupBy(*key)
-        .agg(
-            F.max(F.when(F.col("_side") == 0, 1).otherwise(0)).alias("_in1"),
-            F.max(F.when(F.col("_side") == 1, 1).otherwise(0)).alias("_in2"),
+    return _triple_changes(
+        parsed.select(
+            *_TRIPLE_KEY,
+            (F.col("_side") == 0).cast("int").alias("_in1"),
+            (F.col("_side") == 1).cast("int").alias("_in2"),
         )
+    )
+
+
+def _graph_changes(states: DataFrame) -> DataFrame:
+    """Graph-level diff rows from per-graph live hashes (h1, h2); a
+    null hash is an absent graph."""
+    h1, h2 = F.col("h1"), F.col("h2")
+    added = states.filter(h2.isNotNull() & (h1.isNull() | (h1 != h2))).select(
+        "graph_id", h2.alias("content_hash"), F.lit("added").alias("change")
+    )
+    removed = states.filter(h1.isNotNull() & (h2.isNull() | (h1 != h2))).select(
+        "graph_id", h1.alias("content_hash"), F.lit("removed").alias("change")
+    )
+    return added.unionByName(removed)
+
+
+# The triple identity key includes datatype and language tag:
+# "hello"@en → "hello"@de is one removed + one added triple in the
+# reference (git diff of canonical N-Triples, which serialize
+# @lang/^^dt), and an IRI object is distinct from a plain literal
+# with the same lexical form.
+_TRIPLE_KEY = ["graph_id", "subj", "pred", "obj", "obj_dt", "obj_lang"]
+
+
+def _triple_changes(tagged: DataFrame) -> DataFrame:
+    """Triple-level diff rows from triples flagged `_in1`/`_in2` (0/1)
+    by the side(s) they are live on. groupBy treats NULL keys as
+    equal, so no sentinel coalescing is needed. One aggregation (with
+    map-side partial agg) replaces a pair of anti-joins — and a graph
+    is a SET of triples, so the grouping's dedup is exact."""
+    return (
+        tagged.groupBy(*_TRIPLE_KEY)
+        .agg(F.max("_in1").alias("_in1"), F.max("_in2").alias("_in2"))
         .filter(F.col("_in1") != F.col("_in2"))
         .select(
-            *key,
+            *_TRIPLE_KEY,
             F.when(F.col("_in2") == 1, F.lit("added"))
             .otherwise(F.lit("removed"))
             .alias("change"),
@@ -337,8 +401,6 @@ def version_deltas(changelog: DataFrame) -> DataFrame:
     independence that makes snapshot/diff scale.
     """
     from pyspark.sql import Window
-
-    from rdf_diff_store_spark.functions.turtle import parse_triples
 
     w = Window.partitionBy("graph_id").orderBy(
         F.col("ts"), F.col("op"), F.coalesce(F.col("content_hash"), F.lit(""))
@@ -561,3 +623,224 @@ def version_intervals(changelog: DataFrame) -> DataFrame:
             "content_hash",
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# As-of index: the reference's query-service caches (src/query.rs:29-99)
+
+BRANCH_PROPERTY = "graft.branch"
+_INDEX_CAPACITY = 8  # sources indexed at once, each holding up to two persisted frames
+_BUILD_AT = 2  # the request of a half that builds it, at first
+_MAX_BUILD_AT = 64  # ... and at most, for a source whose files keep changing
+# Hits that pay for a build, with a margin. Medians on a writer table
+# (scripts/asof_churn.py, 4 vCPUs, C1): a build costs a derived diff
+# plus 2.5 CPU-s (0.7 s), a hit saves 1.0 CPU-s (0.34 s), so a build
+# breaks even after 2-3 hits; on perfbench's store source, whose
+# derivation costs more, after about two.
+_PAYOFF_HITS = 4
+_FILE_STATUS = re.compile(r"path=([^;]*); .*?length=(\d+); .*?modification_time=(\d+);")
+
+
+def _source_files(changelog: DataFrame) -> tuple | None:
+    """(path, length, modification_time) of every file the changelog
+    reads, or None when it cannot be indexed: its analyzed plan is
+    nondeterministic or has a leaf that is not a listed file relation
+    (in-memory rows, an RDD, a checkpoint). A constant number of py4j
+    calls per leaf: each relation's listing crosses in ONE `mkString`
+    of its FileStatus strings, never one round trip per file. The
+    access time in those strings is left out: reads move it."""
+    plan = changelog._jdf.queryExecution().analyzed()
+    if not plan.deterministic():
+        return None
+    leaves = plan.collectLeaves()
+    files: list[tuple] = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        loc = rel.location()
+        if loc.getClass().getSimpleName() != "InMemoryFileIndex":
+            return None
+        listing = loc.allFiles()
+        found = _FILE_STATUS.findall(listing.mkString("\n"))
+        if len(found) != listing.size():
+            return None  # a FileStatus string of another shape
+        files += found
+    return tuple(sorted(files))
+
+
+def _live(t: Column) -> Column:
+    """The interval [valid_from, valid_to) holds t (NULL valid_to: still live)."""
+    return F.coalesce(
+        (F.col("valid_from") <= t) & (F.col("valid_to").isNull() | (t < F.col("valid_to"))),
+        F.lit(False),
+    )
+
+
+class _IndexEntry:
+    """One source's as-of index. Two halves, each persisted by the
+    request that reaches `build_at` requests for it: `versions`
+    — `version_intervals` without the empty intervals that same-ts
+    ties leave — for snapshots and graph-level diffs, and `triples` —
+    their parse, each triple carrying its version's interval — for
+    triple snapshots and triple-level diffs. A request is one filter
+    over a half."""
+
+    def __init__(self, changelog: DataFrame, files: tuple, build_at: int = _BUILD_AT):
+        self.changelog = changelog
+        self.files = files
+        self.paths = frozenset(f[0] for f in files)
+        self.build_at = build_at
+        self.halves: dict[str, DataFrame] = {}
+        self.requests: dict[str, int] = {}  # per half, before it was built
+        self.hits = 0
+
+    def next_build_at(self) -> int:
+        """`build_at` for the key that supersedes this one: a build that
+        served fewer than `_PAYOFF_HITS` hits per built half before its
+        files changed was wasted, so the source's next key waits twice
+        as long."""
+        if self.halves and self.hits < _PAYOFF_HITS * len(self.halves):
+            return min(2 * self.build_at, _MAX_BUILD_AT)
+        return self.build_at
+
+    def build(self, half: str) -> None:
+        versions = self.halves.get("versions")
+        if versions is None:  # derived again if `versions` is built later
+            versions = version_intervals(self.changelog).filter(
+                F.col("valid_from").isNotNull()
+                & (F.col("valid_to").isNull() | (F.col("valid_to") > F.col("valid_from")))
+            )
+        if half == "versions":
+            df = versions
+        else:
+            df = parse_triples(
+                versions.select("graph_id", F.col("valid_from").alias("ts"), "payload", "valid_to"),
+                passthrough="valid_to",
+            ).withColumnRenamed("ts", "valid_from")
+        # Deserialized: a serialized level re-encodes every cached batch.
+        df = df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        if half == "versions":
+            # Materialized now: until its cache is filled, a plan over it
+            # reports no partitioning, so a join of two snapshots on
+            # graph_id (e.g. over a bucketed changelog) would plan an
+            # Exchange. `triples` is filled by the building request's
+            # own job instead (one job, not two): its consumers, SPARQL
+            # joins and the triple diff, shuffle on other keys anyway.
+            try:
+                df.count()
+            except BaseException:
+                df.unpersist()
+                raise
+        self.halves[half] = df
+
+    def drop(self) -> None:
+        for df in self.halves.values():
+            df.unpersist()
+        self.halves.clear()
+
+    def snapshot(self, t: Column) -> DataFrame:
+        return self.halves["versions"].filter(_live(t)).select(
+            "graph_id", F.col("valid_from").alias("ts"), "payload", "content_hash"
+        )
+
+    def snapshot_triples(self, t: Column) -> DataFrame:
+        return self.halves["triples"].filter(_live(t)).select(
+            "graph_id", F.col("valid_from").alias("ts"), "subj", "pred", "obj", "obj_dt", "obj_lang"
+        )
+
+    def diff(self, t1: Column, t2: Column, on_triples: bool) -> DataFrame:
+        live1, live2 = _live(t1), _live(t2)
+        if not on_triples:
+            return _graph_changes(
+                self.halves["versions"].filter(live1 | live2)
+                .groupBy("graph_id")
+                .agg(
+                    # intervals of one graph are disjoint: at most one
+                    # version is live at each probe
+                    F.max(F.when(live1, F.col("content_hash"))).alias("h1"),
+                    F.max(F.when(live2, F.col("content_hash"))).alias("h2"),
+                )
+            )
+        return _triple_changes(
+            self.halves["triples"].filter(live1 | live2).select(
+                *_TRIPLE_KEY, live1.cast("int").alias("_in1"), live2.cast("int").alias("_in2")
+            )
+        )
+
+
+class _AsofIndex:
+    """The as-of indexes of this driver, keyed by (applicationId,
+    semanticHash) and LRU-bounded. An entry also holds the file
+    statuses and the plan it was keyed from. A request with an entry's
+    key but other files (a rewrite) or a plan that is not
+    `sameSemantics`, or one that reads some of an entry's files among
+    other ones (an append, a writer's commit: a new glob, a new key),
+    supersedes it: its frames are unpersisted at once and the new
+    entry inherits its `next_build_at`. Per half, requests
+    before the `build_at`-th (at first the 2nd) derive, so a one-shot
+    read never pays the whole-history parse, and a source whose files
+    change every few reads stops building."""
+
+    def __init__(self, capacity: int):
+        self._entries = _LRU(capacity, on_evict=_IndexEntry.drop)
+        self._lock = threading.Lock()
+
+    def request(self, changelog: DataFrame, half: str) -> _IndexEntry | None:
+        """Count one as-of request needing `half` ("versions" or
+        "triples"); returns the index to serve it from, or None to
+        derive it. Sets `graft.branch` on the calling thread, so the
+        jobs that run this request's plan carry the branch; it stays
+        set until the next request."""
+        try:
+            sc = changelog.sparkSession.sparkContext
+        except AttributeError:  # Spark Connect: no JVM handles to key a source by
+            return None
+        with self._lock:
+            entry, branch = self._lookup(changelog, sc.applicationId, half)
+            sc.setLocalProperty(BRANCH_PROPERTY, branch)
+            if branch == "asof_build":
+                entry.build(half)
+        return entry
+
+    def _lookup(
+        self, changelog: DataFrame, app: str, half: str
+    ) -> tuple[_IndexEntry | None, str]:
+        files = _source_files(changelog)
+        if files is None:
+            return None, "asof_derive"
+        key = (app, changelog.semanticHash())
+        entry = self._entries.get(key)
+        if entry is None or entry.files != files or not entry.changelog.sameSemantics(changelog):
+            paths = {f[0] for f in files}
+            build_at = _BUILD_AT
+            for k, old in list(self._entries.items()):
+                if k[0] != app:
+                    del self._entries[k]  # frames of a stopped context: nothing to unpersist
+                elif k == key or (old.files != files and not paths.isdisjoint(old.paths)):
+                    del self._entries[k]  # superseded
+                    build_at = max(build_at, old.next_build_at())
+                    old.drop()
+            entry, _ = self._entries.get_or(key, lambda: _IndexEntry(changelog, files, build_at))
+        else:
+            self._entries.move_to_end(key)
+        if half in entry.halves:
+            entry.hits += 1
+            return entry, "asof_hit"
+        entry.requests[half] = entry.requests.get(half, 0) + 1
+        if entry.requests[half] < entry.build_at:
+            return None, "asof_derive"
+        return entry, "asof_build"
+
+    def clear(self) -> None:
+        """Drop every index (the next request per source derives)."""
+        with self._lock:
+            while self._entries:
+                _, entry = self._entries.popitem()
+                entry.drop()
+
+
+_ASOF = _AsofIndex(_INDEX_CAPACITY)

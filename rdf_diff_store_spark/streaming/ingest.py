@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from rdf_diff_store_spark.schemas import CHANGELOG, GRAPH_UPDATES
-from rdf_diff_store_spark.streaming.state import CommitLog, read_or_empty
+from rdf_diff_store_spark.streaming.state import CommitLog, upto_glob
 
 
 class StreamingChangelogWriter:
@@ -89,16 +89,26 @@ class StreamingChangelogWriter:
         self.n_buckets = n_buckets if v is None else self.log.read(v)["n_buckets"]
 
     def read_changelog(self) -> DataFrame:
-        """The full changelog, plain-scan. No read-side dropDuplicates:
+        """The committed changelog, plain-scan: the compacted segments
+        and ``batch-s0..V`` for the latest committed version V, found by
+        one glob. A ``batch-s(V+1)/`` that an attempt wrote before crashing
+        short of its commit record is not part of the table (the
+        replay rewrites it), so the files a reader sees change only on
+        a commit or a compaction. No read-side dropDuplicates:
         exact batch replays are absorbed by the commit record's fingerprint,
         in-order resends by the normalize-vs-state skip rule, and the
         pathological case — a FRESH stream checkpoint re-feeding old
         data in different batch shapes — by the periodic `compact()`.
         A whole-table shuffle on every read was the wrong place to pay
-        for that last case (r02 VERDICT wrong #3). Only a missing table
-        reads as empty; any other read failure propagates."""
-        recursive = self.spark.read.option("recursiveFileLookup", "true")
-        return read_or_empty(self.spark, self.table_dir, CHANGELOG, recursive)
+        for that last case (r02 VERDICT wrong #3). Only a table with
+        nothing committed reads as empty; any other read failure
+        propagates."""
+        v = self.log.latest()
+        if v is None:
+            return self.spark.createDataFrame([], CHANGELOG)
+        return self.spark.read.parquet(
+            *self.log.glob(f"{self.table_dir}/batch-{{compacted-*,s{upto_glob(v)}}}")
+        )
 
     # -- compact current state (one row per graph) ----------------------
     def _latest_state_version(self) -> int | None:

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from rdf_diff_store_spark.streaming.state import CommitLog
+from rdf_diff_store_spark.streaming.state import CommitLog, upto_glob
 
 _EMPTY_BANDS_SCHEMA = "band int, band_hash long"
 
@@ -67,16 +67,20 @@ class StreamingNearDupFilter:
         # schema inferred from the files: _id's type follows id_col
         # (long doc ids, string urls, ...) — a hardcoded schema would
         # break the read for any non-long id
-        return self.spark.read.parquet(
-            *(f"{self.bands_dir}/batch-s{n}" for n in range(upto + 1))
-        )
+        return self.spark.read.parquet(*self.log.glob(f"{self.bands_dir}/batch-s{upto_glob(upto)}"))
 
     def read_kept(self) -> DataFrame:
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .parquet(self.out_dir)
-            .dropDuplicates()
-        )
+        """The accepted documents of the committed batches only: a
+        ``batch-sN/`` written by an attempt that crashed before its
+        commit record is left out (its replay rewrites it). The kept
+        rows' schema follows the input's, so a filter with nothing
+        committed has nothing to read and raises."""
+        v = self._latest_version()
+        if v is None:
+            raise FileNotFoundError(f"{self.out_dir}: no batch committed yet")
+        return self.spark.read.parquet(
+            *self.log.glob(f"{self.out_dir}/batch-s{upto_glob(v)}")
+        ).dropDuplicates()
 
     # -- the filter -------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:

@@ -53,6 +53,23 @@ def read_or_empty(
         return spark.createDataFrame([], schema)
 
 
+def upto_glob(v: int) -> str:
+    """A Hadoop glob alternation matching the decimal numerals 0..v (no
+    leading zeros), e.g. 230 → ``{[0-9],[1-9][0-9],[1-1][0-9][0-9],2[0-2][0-9],230}``:
+    one pattern of O(digits) terms for a committed prefix of versions,
+    which `HadoopFS.glob` resolves in one listing, however many
+    versions there are."""
+    s = str(v)
+    alts = ["[0-9]"] if len(s) > 1 else []
+    alts += ["[1-9]" + "[0-9]" * (k - 1) for k in range(2, len(s))]
+    for i, c in enumerate(s):
+        lo = 1 if i == 0 and len(s) > 1 else 0
+        if int(c) > lo:
+            alts.append(f"{s[:i]}[{lo}-{int(c) - 1}]" + "[0-9]" * (len(s) - i - 1))
+    alts.append(s)
+    return "{" + ",".join(alts) + "}"
+
+
 class HadoopFS:
     """The FileSystem operations the sinks and the stage recorder need,
     on the Hadoop FileSystem of each path's scheme: a driver-local
@@ -77,6 +94,15 @@ class HadoopFS:
         hpath, fs = self._resolve(path)
         names = (st.getPath().getName() for st in fs.listStatus(hpath))
         return [n for n in names if n.startswith(prefix)]
+
+    def glob(self, pattern: str) -> list[str]:
+        """The paths a Hadoop glob matches: one listing, and one py4j
+        round trip for all of them. A reader handed these paths, not
+        the pattern, keeps Spark from warning, with a stack trace, that
+        a glob "does not exist" as a metadata directory."""
+        hpath, fs = self._resolve(pattern)
+        found = self._jvm.org.apache.spark.deploy.SparkHadoopUtil.get().globPath(fs, hpath)
+        return found.mkString("\n").splitlines()
 
     def rename(self, src: str, dst: str) -> None:
         hsrc, fs = self._resolve(src)
@@ -138,7 +164,9 @@ class CommitLog(HadoopFS):
 
     def commit(self, n: int, record: dict) -> None:
         """Create record N all-or-nothing (temp file + rename: Structured
-        Streaming's commit-log writer); raises if N already exists."""
+        Streaming's commit-log writer); raises if N already exists,
+        after deleting the hidden temp file (`.N.<uuid>.tmp`, and its
+        `.crc` with it) that the refused rename leaves behind."""
         text = json.dumps(record)
         hpath, fs = self._resolve(self._path(n))
         fs.mkdirs(hpath.getParent())  # createAtomic needs the parent
@@ -147,7 +175,12 @@ class CommitLog(HadoopFS):
             hpath.getParent(), self._conf
         ).createAtomic(hpath, False)
         out.write(bytearray(text.encode("utf-8")))
-        out.close()
+        try:
+            out.close()
+        except Exception:
+            for st in fs.globStatus(self._Path(f"{self.dir}/.{n}.*.tmp")) or []:
+                fs.delete(st.getPath(), False)
+            raise
         self._known, self._last = n, (n, json.loads(text))
 
 

@@ -261,13 +261,35 @@ def main() -> None:
     )
 
     # 6. anti-join diff reuses the dual-state exchange at runtime
-    # (static explain duplicates the subtree; AQE dedups it)
+    # (static explain duplicates the subtree; AQE dedups it). That is
+    # the derivation branch, which a source's first request takes: the
+    # query loop above already built the sf changelog's as-of index,
+    # so drop it first.
+    from rdf_diff_store_spark.operators.versioned import _ASOF
+
+    _ASOF.clear()
     diff_df = qs["diff_versions"](spark, sf_dir)
     diff_df.collect()
     executed = diff_df._jdf.queryExecution().executedPlan().toString()
     checks.append(
         ("diff reuses dual-state exchange", "ReusedExchange" in executed, "executed plan")
     )
+    # 6c. the source's later requests are filters over its as-of index:
+    # no window, no max_by, no Python on the request side of the plan
+    for name in ("diff_triples", "snapshot_at"):
+        for _ in range(2):  # the half's second request builds it
+            qs[name](spark, sf_dir)
+        hit = qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        request_side = hit.split("InMemoryRelation")[0]
+        checks.append(
+            (
+                f"{name} from the as-of index is a filter over it",
+                spark.sparkContext.getLocalProperty("graft.branch") == "asof_hit"
+                and "InMemoryTableScan" in request_side
+                and not any(op in request_side for op in ("MapInPandas", "Window", "max_by")),
+                "request-side plan above the cached index",
+            )
+        )
 
     # 7. bucketed changelog storage: the graph_id-keyed reads are
     # EXCHANGE-FREE — the whole point of paying the bucketed write
@@ -300,19 +322,23 @@ def main() -> None:
     # 64 MiB threshold that unset() would drop to the 10 MB default
     prev_abj = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def bucketed_join(fresh: bool) -> str:
+        """Plan of a join of two as-of states of `tb`, both derived
+        (`fresh`: the index is dropped before each request, so each is
+        its source's first) or both served from `tb`'s as-of index."""
+        states = []
+        for t, h in (("2024-01-10 00:00:00", "content_hash"), ("2024-01-20 00:00:00", "h2")):
+            if fresh:
+                _ASOF.clear()
+            states.append(
+                snapshot_at(tb, t).select("graph_id", F.col("content_hash").alias(h))
+            )
+        return states[0].join(states[1], "graph_id")._jdf.queryExecution().executedPlan().toString()
+
     try:
-        b1 = snapshot_at(tb, "2024-01-10 00:00:00").select(
-            "graph_id", "content_hash"
-        )
-        b2 = snapshot_at(tb, "2024-01-20 00:00:00").select(
-            "graph_id", F.col("content_hash").alias("h2")
-        )
-        p_bjoin = (
-            b1.join(b2, "graph_id")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        p_bjoin = bucketed_join(fresh=True)
+        snapshot_at(tb, "2024-01-15 00:00:00")  # the second request builds the index
+        p_bjoin_index = bucketed_join(fresh=False)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_abj)
     checks.append(
@@ -320,6 +346,13 @@ def main() -> None:
             "bucketed as-of self-join is exchange-free",
             "Exchange" not in p_bjoin,
             "diff of two as-of states, merge path, zero shuffles",
+        )
+    )
+    checks.append(
+        (
+            "bucketed as-of self-join from the index is exchange-free",
+            "Exchange" not in p_bjoin_index and "InMemoryTableScan" in p_bjoin_index,
+            "both states filters over the materialized index",
         )
     )
 

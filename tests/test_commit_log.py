@@ -17,7 +17,7 @@ from rdf_diff_store_spark.operators.versioned import append_updates
 from rdf_diff_store_spark.schemas import CHANGELOG
 from rdf_diff_store_spark.streaming.ingest import StreamingChangelogWriter
 from rdf_diff_store_spark.streaming.neardup import StreamingNearDupFilter
-from rdf_diff_store_spark.streaming.state import CommitLog
+from rdf_diff_store_spark.streaming.state import CommitLog, upto_glob
 
 TTL = '<http://e/{0}> <http://e/p> "{1}" .'
 COLS = ["graph_id", "ts", "op", "content_hash", "payload"]
@@ -84,6 +84,25 @@ def test_latest_is_logarithmic_then_constant(committed):
     assert log.calls == 3  # found, then one gallop and one bisect probe
 
 
+@pytest.mark.parametrize("v", [0, 1, 9, 10, 11, 99, 100, 230, 1009, 2000])
+def test_upto_glob_matches_exactly_the_committed_prefix(v):
+    import re
+
+    glob = upto_glob(v)
+    pattern = re.compile(glob.replace("{", "(?:").replace(",", "|").replace("}", ")"))
+    assert [n for n in range(2600) if pattern.fullmatch(str(n))] == list(range(v + 1))
+    assert not pattern.fullmatch("0" + str(v))  # no leading zeros
+
+
+def test_glob_lists_exactly_the_matching_paths(spark, tmp_path):
+    for n in range(13):
+        (tmp_path / f"batch-s{n}").mkdir()
+    fs = CommitLog(spark, f"file:{tmp_path}/_commits")
+    found = fs.glob(f"file:{tmp_path}/batch-s{upto_glob(11)}")
+    assert sorted(int(p.rsplit("batch-s", 1)[1]) for p in found) == list(range(12))
+    assert fs.glob(f"{tmp_path}/batch-x*") == []
+
+
 def test_second_commit_of_a_version_raises(spark, tmp_path):
     log = CommitLog(spark, f"file:{tmp_path}/commits")
     log.commit(0, {"fp": "a"})
@@ -94,8 +113,57 @@ def test_second_commit_of_a_version_raises(spark, tmp_path):
     assert fresh.read(0) == {"fp": "a"}
 
 
+def test_refused_commit_leaves_only_the_record(spark, tmp_path):
+    log = CommitLog(spark, f"file:{tmp_path}/commits")
+    log.commit(0, {"fp": "a"})
+    with pytest.raises(Exception, match="already exists"):
+        CommitLog(spark, str(tmp_path / "commits")).commit(0, {"fp": "b"})
+    assert sorted(p.name for p in (tmp_path / "commits").iterdir()) == [".0.crc", "0"]
+
+
 class _Crash(RuntimeError):
     pass
+
+
+def _crash_before_commit(monkeypatch):
+    def crashing_commit(self, n, record):
+        raise _Crash("before the commit record")
+
+    monkeypatch.setattr(CommitLog, "commit", crashing_commit)
+
+
+def test_reader_skips_a_batch_that_crashed_before_its_commit(spark, tmp_path, monkeypatch):
+    table = f"file:{tmp_path}/log"
+    StreamingChangelogWriter(spark, table).process_batch(_updates(spark, BATCHES[0]), 0)
+    _crash_before_commit(monkeypatch)
+    with pytest.raises(_Crash):
+        StreamingChangelogWriter(spark, table).process_batch(_updates(spark, BATCHES[1]), 1)
+    monkeypatch.undo()
+    assert (tmp_path / "log" / "batch-s1").is_dir()  # written, not committed
+    assert _rows(StreamingChangelogWriter(spark, table).read_changelog()) == _fold(
+        spark, BATCHES[:1]
+    )
+
+
+def test_neardup_reader_skips_a_batch_that_crashed_before_its_commit(
+    spark, tmp_path, monkeypatch
+):
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        "doc_id long, text string",
+    )
+    later = spark.createDataFrame(
+        [(2, "one two three four five six seven eight nine ten eleven")],
+        "doc_id long, text string",
+    )
+    out = f"file:{tmp_path}/kept"
+    StreamingNearDupFilter(spark, out).process_batch(docs, 0)
+    _crash_before_commit(monkeypatch)
+    with pytest.raises(_Crash):
+        StreamingNearDupFilter(spark, out).process_batch(later, 1)
+    monkeypatch.undo()
+    assert (tmp_path / "kept" / "batch-s1").is_dir()
+    assert [r.doc_id for r in StreamingNearDupFilter(spark, out).read_kept().collect()] == [1]
 
 
 @pytest.mark.parametrize("crash_after", ["batch dir", "state dir", "commit record"])

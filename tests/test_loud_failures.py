@@ -67,9 +67,16 @@ def test_read_changelog_missing_table_is_empty(spark, tmp_path):
 def test_read_changelog_corrupt_table_raises(spark, tmp_path):
     from rdf_diff_store_spark.streaming.ingest import StreamingChangelogWriter
 
+    from rdf_diff_store_spark.streaming.state import CommitLog
+
     table = tmp_path / "table"
     (table / "batch-s0").mkdir(parents=True)
     (table / "batch-s0" / "part-0.parquet").write_text("this is not parquet")
+    # committed, so batch-s0 is part of the table (an uncommitted
+    # segment is not read at all)
+    CommitLog(spark, f"{table}__state/_commits").commit(
+        0, {"fp": "", "manifest": {}, "n_buckets": 16}
+    )
     writer = StreamingChangelogWriter(spark, str(table))
     with pytest.raises(Exception):
         writer.read_changelog().count()
