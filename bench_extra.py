@@ -9,8 +9,10 @@ checkable without running Spark.
 
 Usage:
   python bench_extra.py [--tag before] [--reps 3] [--queries a,b,c]
-                        [--no-plans] [--sf-dir /root/testdata/sf1.0]
-Prints one JSON line like bench.py (queries dict only, no kg).
+                        [--sf-dir DIR]
+The headline list, the noop sink and the default data directory
+(SPARK_GRAFT_SF_DIR, else sf0.1) are bench.py's. Prints one JSON line
+like bench.py (queries dict only, no kg).
 """
 
 from __future__ import annotations
@@ -25,25 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "snapshot_at",
-    "diff_versions",
-    "diff_triples",
-    "compact_versions",
-    "sparql_bgp_join",
-    "sparql_path_plus",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "window_topk_per_group",
-    "doc_exact_dedup",
-    "doc_quality_score",
-    "ann_cosine_topk",
-]
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import HEADLINE, force  # noqa: E402
 
 
 def main() -> None:
@@ -51,7 +35,7 @@ def main() -> None:
     ap.add_argument("--tag", default=None, help="plan file suffix (before/after); omit to skip")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--queries", default=None)
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod

@@ -99,7 +99,7 @@ def characteristic_sets(triples: DataFrame) -> DataFrame:
     a SUBSET of a required clustering satisfies it; the naive
     `.distinct().groupBy(subj)` spelling pays a second full-corpus
     exchange on (s,p,o) for nothing (measured 2 exchanges → 1, values
-    identical — bench_stats_scale.py). collect_set is a
+    identical; the 16.2M-triple timings are in BENCH.md). collect_set is a
     partial-aggregating SET accumulator bounded by the vocabulary. The
     paper's empirical law makes the rollup free: 10^9+ real-web
     triples produce only ~10^3-10^4 distinct characteristic sets, so

@@ -1,54 +1,38 @@
-"""The shared append-only distinct-state discipline behind the
-mark-free streaming maintainers (`StreamingFactSupport`,
-`StreamingEntailment`, `StreamingLinkGraph`): an append-only parquet
-directory holding a DISTINCT row set, grown by anti-join append.
+"""Filesystem plumbing shared by the micro-batch sinks and the stage
+recorder, on the Hadoop FileSystem of each path's scheme:
 
-Idempotent-set semantics make replays self-healing with NO high-water
-mark: a replayed batch — whether the crash hit before or after the
-append — derives against whatever state survived and appends only
-what is still missing. The two invariants every consumer needs, in
-one place so they cannot drift (an earlier copy of `read()` in
-entail_stream.py swallowed ALL read exceptions, so a transient
-parquet fault would silently zero the closure and make the next
-replay append duplicates — exactly the fault mode this class's
-missing-directory-only check exists to prevent):
-
-* `read()` treats only a MISSING directory as "empty state"; any
-  other failure (corrupt file, permissions, transient IO) propagates.
-* every append is `localCheckpoint()`-materialized BEFORE the write
-  touches the directory the deriving anti-join reads from.
-
-Production buckets the directory by a consumer-chosen hash key
-(sources/bucketed_store.py) so per-batch anti-joins and read-side
-aggregations co-locate; the flat parquet directory is the test shape.
-The versioned sinks commit through `CommitLog` instead.
+* `read_or_empty` — a parquet read in which ONLY a missing path means
+  "nothing written yet" (the update-stream applier's history); any
+  other failure (corrupt file, permissions, an unknown scheme,
+  transient IO) propagates.
+* `upto_glob` — one Hadoop glob matching versions 0..V, so a committed
+  prefix is read in one listing.
+* `HadoopFS` — exists, list, glob, rename and delete through the JVM's
+  FileSystem, never a driver-local `os.path` call (the stage recorder's
+  resume checks).
+* `CommitLog` — the one atomic record per micro-batch version that the
+  changelog writer and the near-dup filter commit through.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def is_path_not_found(e: AnalysisException) -> bool:
-    """The one read failure that means "nothing written yet"."""
-    return e.getCondition() == "PATH_NOT_FOUND"
-
-
 def read_or_empty(
-    spark: SparkSession, path: str, schema: str | StructType, reader=None
+    spark: SparkSession, path: str, schema: str | StructType
 ) -> DataFrame:
-    """`path` read as parquet (through `reader`, default `spark.read`);
-    ONLY a missing path reads as an empty `schema` frame — a corrupt
-    file, a permission error or a transient IO fault propagates."""
+    """`path` read as parquet with `schema`; ONLY a missing path reads
+    as an empty `schema` frame — a corrupt file, a permission error or
+    a transient IO fault propagates."""
     try:
-        return (reader or spark.read).parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as e:
-        if not is_path_not_found(e):
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return spark.createDataFrame([], schema)
 
@@ -183,62 +167,3 @@ class CommitLog(HadoopFS):
             raise
         self._known, self._last = n, (n, json.loads(text))
 
-
-class AppendOnlyState:
-    def __init__(
-        self, spark: SparkSession, work_dir: str, name: str, schema: str
-    ) -> None:
-        self.spark = spark
-        self.schema = schema
-        self.path = os.path.join(work_dir, name)
-
-    def _exists(self) -> bool:
-        """Existence on the Hadoop FileSystem (r04 ADVICE #2). Under
-        Spark Connect the private `_jvm`/`_jsc` handles are unavailable
-        (r05 ADVICE #3): fall back to a driver-local check for local
-        paths, else to a cheap schema probe in which only
-        PATH_NOT_FOUND means absent."""
-        try:
-            fs = HadoopFS(self.spark)
-        except AttributeError:  # Spark Connect's PySparkAttributeError too
-            return self._exists_without_jvm()
-        return fs.exists(self.path)
-
-    def _exists_without_jvm(self) -> bool:
-        if "://" not in self.path or self.path.startswith("file:"):
-            local = self.path
-            if local.startswith("file:"):
-                local = local[len("file:"):]
-            return os.path.exists(local)
-        try:
-            self.spark.read.parquet(self.path).schema
-            return True
-        except AnalysisException as e:
-            if is_path_not_found(e):
-                return False
-            raise
-
-    def read(self) -> DataFrame:
-        """Current state; ONLY a missing directory means empty."""
-        if not self._exists():
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.parquet(self.path)
-
-    def overwrite(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.path)
-
-    def append(self, new: DataFrame) -> None:
-        """Append pre-derived novel rows (caller owns the anti-join —
-        e.g. a semi-naive delta derivation). Checkpoints first: the
-        rows must materialize before the write touches the directory
-        their derivation read from."""
-        new = new.localCheckpoint()
-        if not new.isEmpty():
-            new.write.mode("append").parquet(self.path)
-
-    def append_if_new(self, batch: DataFrame, cols: list[str]) -> None:
-        """The standard step: distinct batch rows minus current state,
-        appended. Replaying any batch is a no-op by construction."""
-        self.append(
-            batch.select(*cols).distinct().join(self.read(), cols, "left_anti")
-        )

@@ -48,9 +48,7 @@ class UpdateStreamApplier:
         """The stored changelog. Read through Spark, not os.path, so a
         `file:` or remote work_dir sees its history; only a missing
         table means "no history yet", any other read failure raises."""
-        return read_or_empty(
-            self.spark, self.dir, CHANGELOG, self.spark.read.schema(CHANGELOG)
-        )
+        return read_or_empty(self.spark, self.dir, CHANGELOG)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from rdf_diff_store_spark.plans.sparql_update import apply_update
