@@ -327,12 +327,10 @@ def q_sparql_filter_regex(spark, sf_dir):
 
 def q_sparql_path_plus(spark, sf_dir):
     """Property path p+ : transitive closure of per-region nextNation
-    chains via iterative doubling joins."""
-    t = triples_from_tpch(spark, sf_dir)
-    edges = t.filter(F.col("pred") == "nextNation").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return transitive_closure(edges).select("src", "dst")
+    chains via iterative doubling joins (plans/algebra.py::path_plus)."""
+    from rdf_diff_store_spark.plans.algebra import path_plus
+
+    return path_plus(triples_from_tpch(spark, sf_dir), "nextNation")
 
 
 def q_sparql_text_select(spark, sf_dir):
@@ -917,10 +915,10 @@ FROM (
 
 
 def q_doc_token_count(spark, sf_dir):
+    from rdf_diff_store_spark.functions.text import token_count
+
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens")
-    )
+    return docs.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
 
 
 def q_doc_exact_dedup(spark, sf_dir):
@@ -948,17 +946,17 @@ def q_doc_quality_score(spark, sf_dir):
     the regex work ran on 2 cores; repartition to core count first —
     measured at sf1.0: 0.91 s → 0.35 s, identical rows (guide §2.5).
     Guarded on actual scan parallelism so a well-split table at scale
-    skips the shuffle."""
+    skips the shuffle. An empty document's alpha ratio is NULL
+    (functions/text.py::quality_features), as in the oracle."""
+    from rdf_diff_store_spark.functions.text import quality_features
     from rdf_diff_store_spark.sources.relational import widen_if_narrow
 
     docs = widen_if_narrow(load_table(spark, sf_dir, "documents"), "doc_id", sf_dir, "documents")
-    alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
-    total = F.length(F.col("text"))
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    q = quality_features(F.col("text"))
     return docs.select(
         "doc_id",
-        F.round(alpha / total, 4).alias("alpha_ratio"),
-        F.round(total / n_tok, 4).alias("mean_tok_len"),
+        q["alpha_ratio"].alias("alpha_ratio"),
+        q["mean_tok_len"].alias("mean_tok_len"),
     )
 
 
@@ -966,14 +964,18 @@ def q_training_set_selection(spark, sf_dir):
     """End-to-end training-data selection: quality gate (alpha ratio,
     token range) → language allowlist → exact dedup keep-first. The
     composition every large-scale corpus pipeline runs before
-    tokenization; all JVM expressions + one hash-agg."""
+    tokenization; all JVM expressions + one hash-agg. The alpha ratio
+    is functions/text.py::quality_features' (NULL on an empty
+    document, which the gate then drops)."""
+    from rdf_diff_store_spark.functions.text import quality_features
+
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", "")) / F.length("text")
+    q = quality_features(F.col("text"))
+    n_tok = q["n_tokens"]
     filtered = docs.filter(
         (F.col("lang").isin("en", "de", "fr"))
         & (n_tok.between(20, 200))
-        & (F.round(alpha, 4) >= 0.7)
+        & (q["alpha_ratio"] >= 0.7)
     )
     kept = (
         filtered.select(F.md5("text").alias("h"), "doc_id", "lang", n_tok.alias("n_tokens"))
@@ -1805,9 +1807,10 @@ def q_doc_token_count_bpe(spark, sf_dir):
 
 
 def q_doc_winnow_fingerprints(spark, sf_dir):
-    """Winnowing (rolling-hash) fingerprint count per document —
-    portable md5 variant of functions.text.winnow_fingerprints
-    (k=5-char grams, w=4 windows, distinct window-min hashes)."""
+    """Winnowing (rolling-hash) fingerprint count per document
+    (Schleimer/Wilkerson/Aiken): md5 of every k=5-char gram, the
+    minimum of each w=4 window, distinct window mins = the fingerprint
+    set. md5 keeps it engine-portable."""
     from rdf_diff_store_spark.operators.dedup import bind_once
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2137,10 +2140,9 @@ def _portable_simhash16(docs):
 
 
 def q_doc_simhash_portable(spark, sf_dir):
-    """Portable 16-bit SimHash signatures (see _portable_simhash16).
-    The production path is the 64-bit xxhash64 Arrow UDF
-    (operators.dedup.simhash_signature); this twin makes the SimHash
-    FAMILY oracle-checkable."""
+    """Portable 16-bit SimHash signatures (see _portable_simhash16):
+    md5 bit votes per word, so the DuckDB oracle reproduces every
+    signature bit-for-bit."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return _portable_simhash16(docs)
 
@@ -4488,9 +4490,11 @@ def q_doc_sequence_pack(spark, sf_dir):
     cumulative-offset window runs per shard in parallel — no global
     order, no single-partition window. Output one row per (shard,
     sequence): how many docs START in it and their token mass."""
+    from rdf_diff_store_spark.functions.text import token_count
+
     docs = load_table(spark, sf_dir, "documents")
     seq_len = 512
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = token_count(F.col("text"))
     d = docs.select(
         "doc_id", (F.col("doc_id") % 8).alias("shard"), n_tok.alias("n_tokens")
     )
@@ -4580,6 +4584,8 @@ def q_dataset_mixture_sample(spark, sf_dir):
     every run, engine, and partitioning — rand()-based sampling can't
     be replayed or oracle-checked. One scan, one agg; the keep gate
     is a map-side filter at 100 TB."""
+    from rdf_diff_store_spark.functions.text import token_count
+
     docs = load_table(spark, sf_dir, "documents")
     h1 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     keep = (
@@ -4588,7 +4594,7 @@ def q_dataset_mixture_sample(spark, sf_dir):
         .when(F.col("source") == "src2", h1 < "4")
         .otherwise(h1 < "2")
     )
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = token_count(F.col("text"))
     return (
         docs.select("source", keep.alias("keep"), n_tok.alias("n_tokens"))
         .groupBy("source")
@@ -4715,13 +4721,14 @@ def q_doc_priority_sample(spark, sf_dir):
     bit-identical in DuckDB — and the plan is TakeOrderedAndProject
     (bounded per-partition heaps), never a global sort: the same plan
     at 1e12 docs."""
+    from rdf_diff_store_spark.functions.text import token_count
     from rdf_diff_store_spark.operators.sketch import priority_sample
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("weight"),
+        token_count(F.col("text")).alias("weight"),
     )
     return priority_sample(d, "weight", k=100, id_col="doc_id", keep_cols=["source", "weight"])
 
@@ -5435,6 +5442,7 @@ def q_doc_len_quantiles(spark, sf_dir):
     longs per lang, mergeable by addition across shards/batches; the
     only data-sized step is the map-side-combined bucket count.
     Bit-identical in DuckDB — no float division anywhere."""
+    from rdf_diff_store_spark.functions.text import token_count
     from rdf_diff_store_spark.operators.sketch import (
         grid_histogram,
         histogram_quantiles,
@@ -5443,7 +5451,7 @@ def q_doc_len_quantiles(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "lang",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("ntok"),
+        token_count(F.col("text")).alias("ntok"),
     )
     hist = grid_histogram(d, ["lang"], "ntok", lo=0, hi=2048, n_bins=64)
     return histogram_quantiles(hist, ["lang"], lo=0, hi=2048, n_bins=64)
@@ -5475,7 +5483,7 @@ FROM c GROUP BY lang
 
 
 
-# -- session-9: BPE tokenizer APPLY (the encode side of bpe_train) ----
+# -- session-9: BPE tokenizer APPLY (the encode side of BPE) ----------
 
 # A trained tokenizer's merge table is a static artifact at apply time;
 # chains are deliberately deep (windo+w needs 5 prior merges) so the
@@ -5492,8 +5500,8 @@ _BPE_APPLY_MERGES = [
 
 def q_doc_bpe_encode(spark, sf_dir):
     """BPE tokenization with a trained merge table (functions/
-    text.py::bpe_encode) — the apply side of `bpe_train` (Sennrich et
-    al. 2016 §2), i.e. what actually runs over all 10^12 documents
+    text.py::bpe_encode) — the apply side of BPE (Sennrich et al.
+    2016 §2), i.e. what actually runs over all 10^12 documents
     when building a training mix. Map-only: the merge table is a
     static broadcast list compiled into a literal replace chain, so
     the whole tokenizer stays inside whole-stage codegen with ZERO
@@ -5565,11 +5573,12 @@ def q_warc_roundtrip(spark, sf_dir):
     into WARC/1.0 response records by the map-only JVM expression
     `warc_record_str`, concatenated into multi-record buffers (one per
     hash bucket, the file-assembly shape), then parsed BACK through
-    the same Arrow-batched record scanner `read_warc` uses on real
-    .warc.gz files. Output values (url, WARC-Date roundtrip, parsed
-    body length, Content-Length frame from the actual record header)
-    are all recomputed independently by the oracle from `documents` —
-    any drift in either the encoder or the parser breaks the match.
+    the same Arrow-batched record scanner (`parse_warc_column`) that
+    reads real .warc.gz files behind a binaryFile scan. Output values
+    (url, WARC-Date roundtrip, parsed body length, Content-Length frame
+    from the actual record header) are all recomputed independently by
+    the oracle from `documents` — any drift in either the encoder or
+    the parser breaks the match.
     Scale shape: encode is whole-stage codegen; parse parallelism is
     the buffer/file count exactly as on a 10^12-page crawl."""
     from rdf_diff_store_spark.sources.warc import (
@@ -6535,11 +6544,13 @@ def q_host_quality_rollup(spark, sf_dir):
     single divisions of EXACT integer sums (never averages of
     per-doc doubles — summation-order-proof across engines, the
     integer-arithmetic rule every portable oracle here follows)."""
+    from rdf_diff_store_spark.functions.text import token_count
+
     docs = load_table(spark, sf_dir, "documents")
     host = (F.col("doc_id") % 20).cast("string")
     alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
     chars = F.length(F.col("text"))
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = token_count(F.col("text"))
     per_doc = docs.select(
         host.alias("host"),
         alpha_chars.alias("ac"),
@@ -9577,7 +9588,7 @@ def q_kg_dict_encode(spark, sf_dir):
     table never joins the dictionary to encode (each row hashes its
     own terms — pytest pins the encode plan join- and shuffle-free),
     and independently-encoded datasets union without re-mapping; the
-    birthday-bound cost is audited by `dict_collisions`. The encoded
+    birthday-bound cost shows as a term_id claimed twice. The encoded
     (s_id, p_id, o_id) frame shrinks every downstream join/sort
     shuffle ~5× vs IRI strings. Roundtrip decode ≡ input is
     pytest-pinned; this query value-checks the id assignment and the
@@ -10020,9 +10031,9 @@ def q_rdf_patch_roundtrip(spark, sf_dir):
     ``A/D <s> <p> <o> <g> .`` lines (pure-JVM sink sharing nquad_line's
     escaping) and parses BACK through the strict one-Arrow-hop parser;
     the query returns the parsed rows, so the oracle (the diff twin
-    with change→op) pins BOTH directions byte-for-byte.
-    apply_rdf_patch's replay (snapshot(t1) + patch ≡ snapshot(t2),
-    null-safe delete keys) is pytest-pinned."""
+    with change→op) pins BOTH directions byte-for-byte. That the
+    parsed patch replays snapshot(t1) into snapshot(t2) is
+    pytest-pinned."""
     from rdf_diff_store_spark.operators.versioned import diff
     from rdf_diff_store_spark.sources.nquads import parse_rdf_patch, serialize_rdf_patch
 

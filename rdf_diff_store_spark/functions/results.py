@@ -102,66 +102,3 @@ def to_sparql_json(df: DataFrame, limit: int | None = None) -> str:
 
 def ask_json(result: bool) -> str:
     return json.dumps({"head": {}, "boolean": bool(result)})
-
-
-def to_sparql_csv(df: DataFrame, limit: int | None = None, tsv: bool = False) -> str:
-    """SPARQL 1.1 Query Results CSV/TSV (W3C sparql11-results-csv-tsv).
-
-    CSV: plain lexical values, RFC 4180 quoting, CRLF rows. TSV: terms
-    in Turtle-ish syntax (<iri>, "lit"@lang / "lit"^^<dt>, _:bnode),
-    LF rows — the round-trippable variant per the spec. Typing comes
-    from the hidden `_lang_v`/`_dt_v` columns when present, else the
-    lexical heuristic sparql_json uses."""
-    rows = df.limit(limit).collect() if limit else df.collect()
-    visible = _visible_columns(df.columns)
-    has_typing = {
-        v: (f"_lang_{v}" in df.columns and f"_dt_{v}" in df.columns) for v in visible
-    }
-
-    def csv_cell(value) -> str:
-        if value is None:
-            return ""
-        s = str(value)
-        if any(ch in s for ch in (",", '"', "\n", "\r")):
-            return '"' + s.replace('"', '""') + '"'
-        return s
-
-    def tsv_term(var: str, row) -> str:
-        value = row[var]
-        if value is None:
-            return ""
-        if isinstance(value, bool):
-            return "true" if value else "false"
-        if isinstance(value, (int, float)):
-            return str(value)
-        s = str(value)
-        esc = s.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n").replace(
-            "\t", "\\t"
-        )
-        if has_typing[var]:
-            lang, dt = row[f"_lang_{var}"], row[f"_dt_{var}"]
-            if lang:
-                return f'"{esc}"@{lang}'
-            if dt and dt != _XSD + "string":
-                return f'"{esc}"^^<{dt}>'
-            if dt:
-                return f'"{esc}"'
-            if s.startswith("_:"):
-                return s
-            return f"<{s}>"
-        t = _term(value) or {}
-        if t.get("type") == "uri":
-            return f"<{s}>"
-        if t.get("type") == "bnode":
-            return s
-        return f'"{esc}"'
-
-    if tsv:
-        lines = ["\t".join("?" + v for v in visible)]
-        for row in rows:
-            lines.append("\t".join(tsv_term(v, row) for v in visible))
-        return "\n".join(lines) + "\n"
-    lines = [",".join(visible)]
-    for row in rows:
-        lines.append(",".join(csv_cell(row[v]) for v in visible))
-    return "\r\n".join(lines) + "\r\n"

@@ -80,36 +80,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), 0))
 
 
-def winnow_fingerprints(text: Column, k: int = 5, w: int = 4) -> Column:
-    """Winnowing document fingerprints (the rolling-hash scheme from
-    Schleimer/Wilkerson/Aiken): hash every k-char gram, slide a
-    w-window over the hash sequence, keep each window's minimum;
-    distinct mins = the fingerprint set. Overlap of fingerprint sets
-    detects partial/contained duplication that whole-document hashing
-    misses. All built-in expressions (substring grams + xxhash64 +
-    windowed array_min)."""
-    from rdf_diff_store_spark.operators.dedup import bind_once
-
-    def build(t: Column) -> Column:
-        n_grams = F.greatest(F.length(t) - k + 1, F.lit(1))
-        return F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.xxhash64(t.substr(i, F.lit(k))),
-        )
-
-    def mins(hs: Column) -> Column:
-        n_windows = F.greatest(F.size(hs) - w + 1, F.lit(1))
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n_windows),
-                lambda i: F.array_min(F.slice(hs, i, w)),
-            )
-        )
-
-    hashes = bind_once(F.lower(text), build)
-    return bind_once(hashes, mins)
-
-
 def lang_id_scores(text: Column) -> Column:
     """Stopword-hit score per language; returns the argmax language
     ('und' when nothing matches). Pure JVM expression tree."""
@@ -131,7 +101,9 @@ def lang_id_scores(text: Column) -> Column:
 
 def quality_features(text: Column) -> dict[str, Column]:
     """Heuristic quality features (length / alpha ratio / mean token
-    length / digit ratio) as named JVM expressions."""
+    length / digit ratio) as named JVM expressions. The ratios over
+    the character count are NULL on an empty text (SQL's x / 0), not
+    an ANSI divide-by-zero error."""
     total = F.length(text)
     alpha = F.length(F.regexp_replace(text, "[^a-zA-Z]", ""))
     digits = F.length(F.regexp_replace(text, "[^0-9]", ""))
@@ -139,8 +111,8 @@ def quality_features(text: Column) -> dict[str, Column]:
     return {
         "n_chars": total,
         "n_tokens": n_tok,
-        "alpha_ratio": F.round(alpha / total, 4),
-        "digit_ratio": F.round(digits / total, 4),
+        "alpha_ratio": F.when(total > 0, F.round(alpha / total, 4)),
+        "digit_ratio": F.when(total > 0, F.round(digits / total, 4)),
         "mean_tok_len": F.round(total / n_tok, 4),
     }
 
@@ -411,102 +383,11 @@ def bpe_pair_counts(
     )
 
 
-def bpe_train(
-    docs: "DataFrame",
-    text_col: str = "text",
-    n_merges: int = 10,
-) -> tuple:
-    """Train n_merges rounds of byte-pair encoding (Sennrich et al.
-    2016) — the full iterative loop whose inner counting pass is
-    `bpe_pair_counts`.
-
-    Returns (ordered merge rules, final segmented word-frequency
-    table ``(w, n, seg array<string>)``).
-
-    Spark-first iterative shape (same discipline as
-    operators/graph.py::pagerank):
-    * The corpus is folded ONCE into a word-frequency table — BPE
-      statistics depend only on (word, count), so every round runs
-      over |vocab| rows, never re-reading the corpus. At 10^12 docs
-      the vocab table is millions of rows, not trillions.
-    * Per round: weighted pair counts (map-side-combinable groupBy
-      over a symbol-pair key space), a 1-row TakeOrdered argmax (the
-      only driver transfer — two strings per round), and a map-only
-      re-segmentation via F.aggregate (greedy left-to-right merge,
-      the reference BPE semantics). localCheckpoint truncates the
-      per-round lineage so round k doesn't recompile k stacked
-      transforms (the Janino-compile hazard documented in CLAUDE.md).
-    * Ties break (count DESC, pair string ASC) — deterministic
-      across partitionings and engines.
-    """
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+")).alias("w")
-        )
-        .filter(F.length("w") >= 1)
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
-        .withColumn("seg", F.split("w", ""))
-        .localCheckpoint()
-    )
-
-    merges = []
-    sep = " "  # cannot occur inside [a-z0-9]+ symbols
-    for _ in range(n_merges):
-        pairs = words.filter(F.size("seg") >= 2).select(
-            "n",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("seg") - 1),
-                    lambda i: F.concat(
-                        F.element_at("seg", i),
-                        F.lit(sep),
-                        F.element_at("seg", i + 1),
-                    ),
-                )
-            ).alias("pair"),
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.desc("cnt"), "pair")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b = top[0].pair.split(sep)
-        merges.append((a, b))
-        merged = a + b
-        # greedy left-to-right merge: append x unless the running
-        # tail is `a` and x is `b` (then replace the tail with ab);
-        # aggregate() folds once per word, so "aaa" under (a,a)
-        # becomes [aa, a] — the reference BPE behavior
-        words = words.withColumn(
-            "seg",
-            F.aggregate(
-                "seg",
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == a)
-                    & (x == b),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(F.lit(merged)),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ),
-        ).localCheckpoint()
-    return merges, words
-
-
 def bpe_encode(text: "Column", merges: list) -> "Column":
     """Tokenize with a TRAINED byte-pair-encoding merge table — the
-    apply side of `bpe_train` (Sennrich et al. 2016 §2: "we apply the
-    learned operations"). Returns array<string> tokens.
+    apply side of BPE (Sennrich et al. 2016 §2: "we apply the learned
+    operations"); `bpe_pair_counts` is the counting pass of training.
+    Returns array<string> tokens.
 
     Production shape: the merge table is a static artifact of a
     one-time training run (a broadcast list, never data), so apply is
@@ -518,10 +399,11 @@ def bpe_encode(text: "Column", merges: list) -> "Column":
     so a word becomes "<c><h><a><r><s>" and merge rank r, (a, b)→ab,
     is one literal `replace("<a><b>", "<ab>")`. Left-to-right
     non-overlapping replace-all per merge, merges in rank order, is
-    EXACTLY the segmentation `bpe_train`'s greedy re-segmentation
-    fold produces for the same merge sequence (pytest-pinned:
-    test_training_pipeline_ops), and DuckDB's `replace` has identical
-    semantics, so the oracle replays the same chain bit-identically.
+    EXACTLY the greedy left-to-right segmentation BPE training
+    produces for the same merge sequence (pytest-pinned on a
+    hand-verified corpus: test_training_pipeline_ops), and DuckDB's
+    `replace` has identical semantics, so the oracle replays the same
+    chain bit-identically.
 
     Reference context: rdf-diff-store outsources tokenization
     entirely (no tokenizer in src/); this is a north_star

@@ -39,19 +39,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def crawl_snapshot(pages: DataFrame, crawl_ts: str | Column) -> DataFrame:
-    """The state of one crawl batch: (url, content_hash) for every
-    page fetched at exactly ``crawl_ts``. Latest-wins within the batch
-    (a url can be re-fetched within one crawl; max_by on fetch order
-    is deterministic because warc_ts ties carry identical content)."""
-    c = F.lit(crawl_ts).cast("timestamp") if isinstance(crawl_ts, str) else crawl_ts
-    return (
-        pages.filter(F.col("warc_ts") == c)
-        .groupBy("url")
-        .agg(F.max("content_hash").alias("content_hash"))
-    )
-
-
 def crawl_delta(
     pages: DataFrame, crawl1: str | Column, crawl2: str | Column
 ) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Deduplication operators for web-scale corpora: exact, MinHash+LSH,
-SimHash, and n-gram Jaccard.
+"""Deduplication operators for web-scale corpora: MinHash+LSH, n-gram
+Jaccard, containment and embedding near-dups.
 
 Design for 100 TB:
 * Shingling and MinHash signatures are pure JVM expression trees
@@ -12,16 +12,10 @@ Design for 100 TB:
   hub keys).
 * Candidate pairs are emitted once (id_a < id_b) and can be verified
   with exact Jaccard (`jaccard_on_pairs`) before clustering.
-* SimHash is a single Arrow-batched pandas UDF producing a 64-bit
-  signature; near-dup = small Hamming distance, and bucketing by
-  rotated prefixes makes it joinable without n².
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -194,16 +188,6 @@ def jaccard_on_pairs(
     return out.select("id_a", "id_b", "jaccard")
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact dedup groups: (content_hash, keep_id, n_docs); canonical
-    keep = min id. Hash-groupBy with partial aggregation."""
-    return (
-        df.select(F.sha2(F.col(text_col), 256).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_docs"))
-    )
-
-
 def embedding_near_dup(
     df: DataFrame,
     threshold: float = 0.95,
@@ -370,34 +354,6 @@ def bloom_decontaminate(
         n_hits.cast("long").alias("n_hits"),
         (n_hits > 0).alias("flagged"),
     )
-
-
-def simhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document (Arrow-batched pandas UDF; numpy
-    bit-bucket accumulation per batch)."""
-    import numpy as np
-
-    def _simhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
-        for pdf in batches:
-            out = []
-            for text in pdf[text_col]:
-                if text is None:
-                    out.append(None)
-                    continue
-                acc = np.zeros(64, dtype=np.int64)
-                for tok in text.split():
-                    h = zlib.crc32(tok.encode()) | (zlib.crc32(tok[::-1].encode()) << 32)
-                    bits = np.unpackbits(
-                        np.frombuffer(np.uint64(h & (2**64 - 1)).tobytes(), dtype=np.uint8)
-                    ).astype(np.int64)  # signed: uint8 would wrap 0*2-1 to 255
-                    acc += bits * 2 - 1
-                sig = int("".join("1" if v > 0 else "0" for v in acc), 2)
-                out.append(sig - 2**63)  # store as signed long
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
-
-    return df.select(id_col, text_col).mapInPandas(_simhash, f"{id_col} long, simhash long")
 
 
 def containment_scores(fps: DataFrame, max_df: int = 20) -> DataFrame:

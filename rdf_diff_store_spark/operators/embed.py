@@ -29,9 +29,9 @@ Why this shape (and not a faithful float SGD port):
   discipline, extended to signed values).
 * **Deterministic everything.** Init vectors are md5-derived
   (the doc_simhash_portable trick), negatives are md5-picked from a
-  bounded candidate list (collected once, broadcast — train_centroids
-  precedent), so the whole training run replays bit-identically and
-  the oracle can unroll it in SQL.
+  bounded candidate list (collected once, broadcast), so the whole
+  training run replays bit-identically and the oracle can unroll it
+  in SQL.
 
 Scale notes: each round is four (id, d) equi-joins + one per-triple
 aggregation + one per-(id, d) gradient sum + the 1-row rescale

@@ -65,29 +65,6 @@ def property_table(
     )
 
 
-def vertical_partitions(
-    triples: DataFrame,
-    subj_col: str = "s",
-    pred_col: str = "p",
-    obj_col: str = "o",
-) -> dict[str, DataFrame]:
-    """The Abadi-style complement: one (s, o) frame per predicate,
-    for workloads that touch few predicates over many subjects.
-    Returns {predicate: DataFrame}; the predicate list is discovered
-    with one vocabulary-sized distinct. Each partition is a pushed-down
-    filter over the same scan — writing them with
-    ``df.write.partitionBy(pred_col)`` gets the same effect as real
-    per-predicate tables (partition pruning) without materializing
-    len(vocabulary) separate writes."""
-    preds = [
-        r[0] for r in triples.select(pred_col).distinct().orderBy(pred_col).collect()
-    ]
-    return {
-        p: triples.filter(F.col(pred_col) == p).select(subj_col, obj_col)
-        for p in preds
-    }
-
-
 def term_id(col: F.Column | str) -> F.Column:
     """Deterministic 60-bit BIGINT term id: the first 15 hex digits of
     md5(term). Hash-assigned ids need ZERO coordination — every
@@ -121,9 +98,8 @@ def dict_encode(
     dictionary — each row hashes its own terms), and two
     independently-encoded datasets can union without re-mapping.
     The cost is the birthday bound: at 10^9 distinct terms over 2^60
-    the collision expectation is ~0.4 pairs, so production runs the
-    `dict_collisions` audit (group dictionary by id, flag count>1)
-    and widens to the full 32-hex key on a hit. The dictionary build
+    the collision expectation is ~0.4 pairs; a collision shows as a
+    term_id that more than one dictionary row claims. The dictionary build
     is ONE distinct over the role-tagged term union (Expand-style
     3× row expansion, map-side combined).
     """
@@ -146,37 +122,6 @@ def dict_encode(
         term_id(obj_col).alias("o_id"),
     )
     return terms, encoded
-
-
-def dict_collisions(dictionary: DataFrame) -> DataFrame:
-    """Collision audit for `dict_encode`: term_ids claimed by more
-    than one distinct term. Empty frame = the 60-bit ids are injective
-    on this corpus (expected until ~10^9 distinct terms)."""
-    return (
-        dictionary.groupBy("term_id")
-        .agg(F.countDistinct("term").alias("n_terms"))
-        .filter(F.col("n_terms") > 1)
-    )
-
-
-def dict_decode(
-    encoded: DataFrame, dictionary: DataFrame
-) -> DataFrame:
-    """Inverse of `dict_encode`: three joins against the (term_id →
-    term) mapping recover (subj, pred, obj). The dictionary is the
-    SMALL side (terms ≪ triples — web KGs run ~10 triples per term) —
-    at dictionary sizes under the broadcast threshold all three joins
-    broadcast; beyond it they are id-hash shuffle joins over 8-byte
-    keys, the cheapest shuffle the corpus admits."""
-    d = dictionary.select("term_id", "term")
-    out = encoded
-    for id_col, name in (("s_id", "subj"), ("p_id", "pred"), ("o_id", "obj")):
-        out = (
-            out.join(d, out[id_col] == d["term_id"], "left")
-            .withColumnRenamed("term", name)
-            .drop("term_id")
-        )
-    return out.select("subj", "pred", "obj")
 
 
 def zorder_key(x, y, bits: int = 21):

@@ -11,11 +11,9 @@ dependency-free environments. On a real cluster you swap in a native
 decoder (torchvision / libvips) by replacing `_decode_image` only —
 no Spark code changes.
 
-Scale notes: media rows are fat — the operators repartition by a
-size-aware key so one Arrow batch never exceeds executor memory
-(`maxRecordsPerBatch` is set per-operator, not globally), and the
-metadata extraction path never deserializes payload bytes it doesn't
-need (column pruning keeps `payload` out of metadata-only plans).
+Scale notes: media rows are fat — the operators cap each Arrow batch
+so one batch never exceeds executor memory (`maxRecordsPerBatch` is
+set per-operator, not globally).
 """
 
 from __future__ import annotations
@@ -218,21 +216,6 @@ def _decode_image(payload: bytes) -> tuple[int, int]:
     return (64 + payload[0] % 64, 64 + payload[1] % 64)
 
 
-# back-compat alias (r01/r02 name)
-_decode_image_stub = _decode_image
-
-
-def media_metadata(media: DataFrame) -> DataFrame:
-    """Typed metadata without touching payload bytes (pure projection;
-    check .explain() → ReadSchema excludes payload)."""
-    return media.select(
-        "media_id",
-        "kind",
-        "mime",
-        F.coalesce(F.col("width"), F.lit(-1)).alias("width"),
-        F.coalesce(F.col("height"), F.lit(-1)).alias("height"),
-    )
-
 
 def image_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
     """Decode + feature-extract images via mapInPandas (Arrow batches
@@ -278,77 +261,6 @@ def image_features(media: DataFrame, batch_rows: int = 64) -> DataFrame:
             .select("media_id", "payload")
             .mapInPandas(
                 _features, "media_id long, dec_width int, dec_height int, mean_byte double"
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-        else:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    return out
-
-
-def resize_png(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resize of a PNG payload: real decode →
-    integer-index resample (src = (dst·src_dim) div dst_dim, exact
-    integer arithmetic, so results are bit-reproducible everywhere) →
-    re-encode. Pure stdlib+numpy; the sandbox stand-in for a
-    Pillow/torchvision transform with the identical batch plumbing."""
-    import numpy as np  # noqa: PLC0415
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"bad target size {out_w}x{out_h}")
-    w, h, pix = decode_png(payload)
-    bpp = len(pix) // (w * h)
-    arr = np.frombuffer(pix, dtype=np.uint8).reshape(h, w, bpp)
-    iy = (np.arange(out_h) * h) // out_h
-    ix = (np.arange(out_w) * w) // out_w
-    out = arr[np.ix_(iy, ix)]
-    ctype = {1: 0, 3: 2, 4: 6}[bpp]
-    return encode_png(out_w, out_h, out.tobytes(), ctype)
-
-
-def image_resize(
-    media: DataFrame, out_w: int, out_h: int, batch_rows: int = 64
-) -> DataFrame:
-    """Distributed image resize via mapInPandas — the third leg of the
-    decode / feature-extract / RESIZE / frame-sample multimodal set.
-    Output: (media_id, width, height, payload) with payload the
-    re-encoded PNG. Same Arrow-batch cap discipline as image_features
-    (fat payloads can't blow a batch); map-only, no shuffle — resize
-    of 10^10 images is embarrassingly parallel and the only knob that
-    matters is batch_rows × payload size vs executor memory."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                if payload[:8] != PNG_SIGNATURE:
-                    continue  # non-PNG media: no real codec in sandbox
-                ids.append(mid)
-                outs.append(resize_png(payload, out_w, out_h))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": [out_w] * len(ids),
-                    "height": [out_h] * len(ids),
-                    "payload": outs,
-                }
-            )
-
-    spark = media.sparkSession
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
-    try:
-        out = (
-            media.filter(F.col("kind") == "image")
-            .select("media_id", "payload")
-            .mapInPandas(
-                _resize, "media_id long, width int, height int, payload binary"
             )
             .localCheckpoint(eager=True)
         )
@@ -440,22 +352,6 @@ def synthetic_wav_media(spark, n: int = 24) -> DataFrame:
     return spark.range(n).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per frame to
-    sample (media_id, frame_ts_ms). The decode itself is stubbed; the
-    row explosion and partitioning — the part that matters for Spark —
-    is real: sequence+explode, no Python."""
-    return (
-        media.filter((F.col("kind") == "video") & F.col("duration_ms").isNotNull())
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 def synthetic_png_media(spark, n: int = 32) -> DataFrame:
     """Deterministic media table whose image payloads are REAL PNGs
     (encode_png), generated distributed via mapInPandas — the full
@@ -482,23 +378,3 @@ def synthetic_png_media(spark, n: int = 32) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return spark.range(n).mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def synthetic_media(spark, n: int = 100) -> DataFrame:
-    """Deterministic fake media table for tests (payload bytes derived
-    from the id — no external data)."""
-    return spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.pmod(F.col("id"), F.lit(3)) + 1).cast("int"),
-        ).alias("kind"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.sha2(F.col("id").cast("string"), 256).cast("binary").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.when(F.pmod(F.col("id"), F.lit(3)) == 2, (F.pmod(F.col("id"), F.lit(10)) + 1) * 1000)
-        .otherwise(F.lit(None))
-        .cast("long")
-        .alias("duration_ms"),
-    )

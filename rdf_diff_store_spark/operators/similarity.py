@@ -133,95 +133,27 @@ def _probe_buckets(bucket: Column, n_planes: int) -> Column:
     return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)])
 
 
-def train_centroids(
-    vectors: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    n_iters: int = 3,
-    sample_rows: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """k-means-lite coarse quantizer training: a few distributed Lloyd
-    iterations over a deterministic hash-ordered sample. The sample
-    stays distributed (assignment is an Arrow pandas UDF, the mean
-    update is posexplode + hash-agg); only the centroid matrix —
-    n_centroids × dim floats — moves between driver and executors per
-    iteration. On clustered real data this recovers the cluster
-    structure that random hyperplane centroids miss (recall test in
-    test_ivf_stateful.py pins the gap)."""
-    import numpy as np
-
-    s = (
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("id").cast("string")))
-        .limit(sample_rows)
-        .localCheckpoint()
-    )
-    init_rows = s.limit(n_centroids).collect()
-    if len(init_rows) < n_centroids:
-        raise ValueError(f"need >= {n_centroids} vectors to train, got {len(init_rows)}")
-    cents = np.stack([np.asarray(r.v, dtype="float64") for r in init_rows])
-    cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-
-    for _ in range(n_iters):
-        assign = _centroid_assign_udf(cents.tolist(), top=1)
-        means = (
-            s.select(F.element_at(assign(F.col("v")), 1).alias("cell"),
-                     F.posexplode(F.col("v")).alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("m"))
-            .collect()
-        )
-        new = cents.copy()  # empty cells keep their previous centroid
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(r.cell, {})[r.pos] = r.m
-        for cell, comps in by_cell.items():
-            vec = np.array([comps[p] for p in range(dim)])
-            n = np.linalg.norm(vec)
-            if n > 1e-12:
-                new[cell] = vec / n
-        cents = new
-    return cents.tolist()
-
-
 def _centroid_assign_udf(centroids, top: int):
     """Arrow UDF: vector → its `top` nearest centroid cells by cosine.
     The centroid matrix rides in the task closure — it is
     n_centroids × dim numbers, i.e. broadcast-sized by construction.
 
-    Integer centroids (the md5-derived portable default) score with
-    EXACT arithmetic: int64 dot product, divided by the centroid norm
-    (sqrt of an exact integer) — bit-identical in any engine; ties
-    break toward the lower cell (stable argsort ⇔ ORDER BY score
-    DESC, cell ASC). Trained float centroids keep the float64 cosine
-    path (no oracle rides that route)."""
+    The centroids are integers (md5_centroids), so scoring is EXACT
+    arithmetic: int64 dot product, divided by the centroid norm (sqrt
+    of an exact integer) — bit-identical in any engine; ties break
+    toward the lower cell (stable argsort ⇔ ORDER BY score DESC, cell
+    ASC)."""
     import numpy as np
 
-    cents = np.asarray(centroids)
-    if np.issubdtype(cents.dtype, np.integer):
-        cents_i = cents.astype("int64")
-        norms_c = np.sqrt((cents_i.astype("float64") ** 2).sum(axis=1))
-
-        @F.pandas_udf(T.ArrayType(T.IntegerType()))
-        def assign_int(vecs: pd.Series) -> pd.Series:
-            q = _quantize(np.stack(vecs.to_numpy()))
-            dp = q @ cents_i.T  # exact int64 (batch, n_centroids)
-            sims = dp.astype("float64") / norms_c
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :top]
-            return pd.Series(list(order.astype("int32")))
-
-        return assign_int
+    cents_i = np.asarray(centroids).astype("int64")
+    norms_c = np.sqrt((cents_i.astype("float64") ** 2).sum(axis=1))
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(vecs: pd.Series) -> pd.Series:
-        cf = cents.astype("float64")
-        mat = np.stack(vecs.to_numpy())
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (mat / norms) @ cf.T  # (batch, n_centroids)
-        order = np.argsort(-sims, axis=1)[:, :top]
+        q = _quantize(np.stack(vecs.to_numpy()))
+        dp = q @ cents_i.T  # exact int64 (batch, n_centroids)
+        sims = dp.astype("float64") / norms_c
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :top]
         return pd.Series(list(order.astype("int32")))
 
     return assign
@@ -248,20 +180,15 @@ def ivf_topk(
     n_probe: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
     round_to: int = 6,
 ) -> DataFrame:
     """IVF-style ANN: coarse quantization, candidates live in their
     nearest centroid's inverted list, queries probe their n_probe
     nearest lists, exact cosine re-rank inside.
 
-    Quantizer options:
-    * `centroids=None` (default): md5-derived INTEGER pseudo-centroids
-      (regenerated identically on every executor — no training job,
-      and exactly reproducible by the DuckDB oracle). Fine for
-      uniform data; weak on clustered data.
-    * `centroids=train_centroids(...)`: k-means-lite trained cells —
-      the recall path for real (clustered) embedding corpora.
+    The quantizer is md5-derived INTEGER pseudo-centroids
+    (regenerated identically on every executor — no training job,
+    and exactly reproducible by the DuckDB oracle).
 
     `n_centroids=None` computes the √n default (one count() job).
     At 1e9+ vectors this is the classic coarse-quantizer pruning:
@@ -273,12 +200,9 @@ def ivf_topk(
     (4/1000 cells = 0.4% of a 1e6 corpus). Scaled probing pins the
     scanned fraction, so recall is size-stable and per-query cost
     stays O(√n · list size)."""
-    if centroids is None:
-        if n_centroids is None:
-            n_centroids = default_n_centroids(candidates)
-        centroids = md5_centroids(n_centroids, dim)
-    else:
-        n_centroids = len(centroids)
+    if n_centroids is None:
+        n_centroids = default_n_centroids(candidates)
+    centroids = md5_centroids(n_centroids, dim)
     if n_probe is None:
         n_probe = max(4, round(n_centroids * 0.05))
     n_probe = min(n_probe, n_centroids)

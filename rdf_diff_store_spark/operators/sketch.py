@@ -103,10 +103,8 @@ def kmv_distinct(
 def _cm_rows_bucket(token_col: str, depth: int, width: int):
     """THE count-min hash recipe — row r's bucket for token t is
     hash52(r || ':' || t) % width. Single definition on purpose:
-    countmin_topk / countmin_counters / countmin_estimate (and the
-    DuckDB oracle twin) are only sketch-compatible while they hash
-    identically — a drifted copy would make merge/estimate silently
-    return wrong numbers. Returns (row-explode col, bucket col)."""
+    countmin_topk and its DuckDB oracle twin agree only while they
+    hash identically. Returns (row-explode col, bucket col)."""
     rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("r")
     bucket = (
         hash52(F.concat(F.col("r").cast("string"), F.lit(":"), F.col(token_col)))
@@ -142,8 +140,7 @@ def countmin_topk(
       (exact column dropped), build the counters straight from the
       stream: explode ×depth, groupBy (row, bucket), map-side partial
       agg collapses to depth×width rows before the shuffle. Either
-      way sketch state is depth×width longs TOTAL, mergeable by
-      addition — the streaming/shardable shape.
+      way sketch state is depth×width longs TOTAL.
     * Estimation: candidate tokens (distinct) join the counter table
       — depth×width rows, broadcast — and take min over rows. No
       shuffle touches per-token counters.
@@ -176,60 +173,6 @@ def countmin_topk(
         )
     )
     return est.orderBy(F.desc("est_count"), token_col).limit(k)
-
-
-def countmin_counters(
-    tokens: DataFrame,
-    token_col: str = "tok",
-    depth: int = 3,
-    width: int = 256,
-) -> DataFrame:
-    """The raw d×w counter table for one shard / micro-batch — built
-    straight from the stream in one map-side-combinable pass (explode
-    ×depth is a constant; partial agg collapses to ≤ depth×width rows
-    per partition before the shuffle). Combine shards with
-    ``countmin_merge`` — the sketch is additive, so incremental /
-    streaming maintenance is `old + batch`, never a recount."""
-    rows, bucket = _cm_rows_bucket(token_col, depth, width)
-    return (
-        tokens.select(F.col(token_col), rows)
-        .select("r", bucket)
-        .groupBy("r", "bucket")
-        .agg(F.count("*").alias("counter"))
-    )
-
-
-def countmin_merge(*counter_tables: DataFrame) -> DataFrame:
-    """Merge shard/batch sketches by addition — exact: the merged
-    table is bit-identical to a sketch built over the concatenated
-    input (pytest-pinned). depth×width rows in, depth×width out."""
-    merged = counter_tables[0]
-    for t in counter_tables[1:]:
-        merged = merged.unionByName(t)
-    return merged.groupBy("r", "bucket").agg(
-        F.sum("counter").alias("counter")
-    )
-
-
-def countmin_estimate(
-    counters: DataFrame,
-    candidates: DataFrame,
-    token_col: str = "tok",
-    depth: int = 3,
-    width: int = 256,
-) -> DataFrame:
-    """Point estimates for ``candidates`` (a frame of distinct tokens)
-    against a counter table: min over the depth rows, one-sided
-    (est ≥ exact always). The counter table is depth×width rows and
-    broadcast — estimation never shuffles it."""
-    rows, bucket = _cm_rows_bucket(token_col, depth, width)
-    return (
-        candidates.select(F.col(token_col), rows)
-        .select(token_col, "r", bucket)
-        .join(F.broadcast(counters), ["r", "bucket"])
-        .groupBy(token_col)
-        .agg(F.min("counter").cast("bigint").alias("est_count"))
-    )
 
 
 def _hll_reg_rank(value_col, b: int):
@@ -272,30 +215,15 @@ def hll_registers(
     Plan shape: ONE groupBy (group, reg) with max(rank) — map-side
     partial max collapses every partition to ≤ m rows per group before
     the shuffle, so the shuffled state is m longs per group regardless
-    of input size. The register table IS the sketch: merge shards with
-    ``hll_merge`` (max is idempotent + commutative — replay-safe), and
-    estimate with ``hll_estimate``. All hashing is md5-positional, so
-    a DuckDB oracle rebuilds registers bit-for-bit.
+    of input size. The register table IS the sketch; estimate with
+    ``hll_estimate``. All hashing is md5-positional, so a DuckDB oracle
+    rebuilds registers bit-for-bit.
     """
     reg, rank = _hll_reg_rank(F.col(value_col).cast("string"), b)
     return (
         df.select(*group_cols, reg, rank)
         .groupBy(*group_cols, "reg")
         .agg(F.max("rank").alias("maxrank"))
-    )
-
-
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge shard/batch HLL register tables by max — exact: merging
-    is register-wise max, so merge-of-shards ≡ sketch-of-whole
-    bit-for-bit (pytest-pinned), and re-merging a replayed shard is a
-    no-op (idempotent). ≤ m rows per group in, same out."""
-    merged = register_tables[0]
-    group_cols = [c for c in merged.columns if c not in ("reg", "maxrank")]
-    for t in register_tables[1:]:
-        merged = merged.unionByName(t)
-    return merged.groupBy(*group_cols, "reg").agg(
-        F.max("maxrank").alias("maxrank")
     )
 
 

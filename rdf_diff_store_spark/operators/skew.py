@@ -1,68 +1,17 @@
-"""Skew-handling join operators (north_star: "skew from hub entities
-is handled with salted repartitioning and AQE skew-join splitting").
+"""Skew-handling operators (north_star: "skew from hub entities is
+handled with salted repartitioning and AQE skew-join splitting").
 
-Two layers of defense:
-
-1. AQE skew-join splitting is ON session-wide
-   (spark.sql.adaptive.skewJoin.enabled, session.py) — Spark splits
-   oversized sort-merge partitions at runtime. This is the default
-   path and costs nothing to adopt.
-2. `salted_join` is the explicit pre-plan remedy for the case AQE
-   can't fix: a broadcast-ineligible join where one side has a few
-   hub keys (the quadratically-skewed entity distribution in
-   sources/pages.py is exactly this). The skewed fact side gets a
-   random-but-deterministic salt in [0, n_salts); the dimension side
-   is replicated n_salts times (explode); the join key becomes
-   (key, salt), spreading each hub key over n_salts reducers.
-
-Salting costs n_salts× replication of the dim side, so use it only
-when dim_rows × n_salts ≪ fact_rows — the hub-entity case.
+AQE skew-join splitting is ON session-wide
+(spark.sql.adaptive.skewJoin.enabled, session.py) — Spark splits
+oversized sort-merge partitions at runtime. `capped_topk_per_group`
+salts the one shape AQE cannot split: a per-group window whose hub
+group would otherwise sort in a single task.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join `fact` ⋈ `dim` on column `on` with hub-key salting.
-
-    The salt is xxhash64 of the fact row's full tuple mod n_salts —
-    deterministic (re-runs produce identical partitioning; no RNG
-    state on executors), uniform enough to split hubs.
-
-    `how` is restricted to fact-side-preserving joins: the dim side is
-    exploded n_salts times, so any dim-preserving join (right/full
-    outer) would emit every unmatched dim row n_salts times.
-    """
-    safe_how = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "semi", "left_anti", "leftanti", "anti", "cross"}
-    if how.lower() not in safe_how:
-        raise ValueError(
-            f"salted_join(how={how!r}): only fact-side-preserving joins are "
-            f"salt-safe ({sorted(safe_how)}); a dim-preserving join would "
-            f"duplicate unmatched dim rows n_salts={n_salts} times"
-        )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(n_salts)).cast("int")
-    salted_fact = fact.withColumn("_salt", salt)
-    salted_dim = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    out = salted_fact.join(salted_dim, [on, "_salt"], how)
-    return out.drop("_salt")
-
-
-def skew_profile(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
-    """Key-frequency profile — the decision input for salting: compare
-    max key count to the mean; ratios ≫ partition count mean a hub."""
-    counts = df.groupBy(key).agg(F.count("*").alias("n"))
-    return counts.orderBy(F.col("n").desc()).limit(top_n)
 
 
 def capped_topk_per_group(

@@ -194,15 +194,6 @@ def append_updates(changelog: DataFrame, updates: DataFrame) -> DataFrame:
     return _normalize_history(changelog.unionByName(incoming))
 
 
-def apply_update_batches(changelog: DataFrame, batches: list[DataFrame]) -> DataFrame:
-    """Fold a sequence of micro-batches through append_updates — the
-    60 s batched-publish cadence (O-04, src/bin/rdf-diff-writer.rs:109-123)
-    expressed as successive transactional appends."""
-    for b in batches:
-        changelog = append_updates(changelog, b)
-    return changelog
-
-
 def compact_changelog(changelog: DataFrame) -> DataFrame:
     """Bulk-replay form of O-01 idempotence: drop versions whose
     content is identical to the graph's *previous* version (lag over

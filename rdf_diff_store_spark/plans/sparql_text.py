@@ -2210,23 +2210,6 @@ def sparql_json(triples: DataFrame, query: str, limit: int | None = None) -> str
     return to_sparql_json(df, limit=limit)
 
 
-def sparql_csv(
-    triples: DataFrame, query: str, limit: int | None = None, tsv: bool = False
-) -> str:
-    """Evaluate a SPARQL string and serialize as SPARQL 1.1 Results
-    CSV (or TSV with `tsv=True` — the round-trippable Turtle-term
-    variant). ASK renders one boolean cell under a `result` header,
-    the common engines' convention."""
-    from rdf_diff_store_spark.functions.results import to_sparql_csv
-
-    form = _parse(query).form
-    df = sparql_query(triples, query, keep_typing=(form == "SELECT"))
-    if form == "ASK":
-        val = "true" if bool(df.first()["ask"]) else "false"
-        return ("?result\n" if tsv else "result\r\n") + val + ("\n" if tsv else "\r\n")
-    return to_sparql_csv(df, limit=limit, tsv=tsv)
-
-
 def sparql_select(triples: DataFrame, query: str) -> DataFrame:
     """Evaluate a SPARQL SELECT string against a (subj, pred, obj)
     triples DataFrame. Returns one column per projected variable.

@@ -9,7 +9,7 @@ Catalyst compiles the text to the same plans the DataFrame API builds.
 
     result_df = execute_sql(spark, changelog, "2024-01-15 00:00:00",
         "SELECT pred, count(*) AS n FROM snapshot_triples GROUP BY pred")
-    json_text = execute_sql_json(...)  # SPARQL-JSON envelope
+    json_text = to_sparql_json(result_df)  # functions/results.py
 """
 
 from __future__ import annotations
@@ -35,13 +35,3 @@ def execute_sql(
     """Evaluate a SQL query string against the snapshot at `ts`."""
     register_snapshot_views(spark, changelog, ts)
     return spark.sql(sql)
-
-
-def execute_sql_json(
-    spark: SparkSession, changelog: DataFrame, ts: str, sql: str, limit: int | None = None
-) -> str:
-    """Evaluate and serialize in the reference's response format
-    (SPARQL 1.1 Results JSON — src/query.rs:111)."""
-    from rdf_diff_store_spark.functions.results import to_sparql_json
-
-    return to_sparql_json(execute_sql(spark, changelog, ts, sql), limit=limit)

@@ -216,26 +216,3 @@ def parse_rdf_patch(df: DataFrame, line_col: str = "value") -> DataFrame:
 
     schema = "op string, " + _PARSED_SCHEMA
     return df.select(line_col).mapInPandas(_parse, schema)
-
-
-def apply_rdf_patch(triples: DataFrame, patch: DataFrame) -> DataFrame:
-    """Replay a parsed patch onto a triple SET: (asserted ∖ deletes)
-    ∪ adds, keyed on the full quad identity (graph, s, p, o, dt,
-    lang). With ``patch = parse_rdf_patch(serialize_rdf_patch(
-    diff(log, t1, t2)))`` this reconstructs snapshot(t2) from
-    snapshot(t1) exactly — the replication contract, pytest-pinned.
-    One anti-join (delta-sized right side) + one union + distinct.
-    The anti-join keys are NULL-SAFE (eqNullSafe): obj_dt/obj_lang and
-    the default-graph id are legitimately NULL, and an equi-key
-    anti-join would silently delete nothing for such rows (NULL = NULL
-    is unknown — the r03 typed-join lesson, plans/algebra.py)."""
-    key = ["graph_id", "subj", "pred", "obj", "obj_dt", "obj_lang"]
-    adds = patch.filter(F.col("op") == "A").select(*key)
-    dels = patch.filter(F.col("op") == "D").select(
-        *[F.col(k).alias(f"_d_{k}") for k in key]
-    )
-    base = triples.select(*key)
-    cond = F.lit(True)
-    for k in key:
-        cond = cond & F.col(k).eqNullSafe(F.col(f"_d_{k}"))
-    return base.join(dels, cond, "left_anti").unionByName(adds).distinct()

@@ -17,12 +17,12 @@ This module is the bridge in both directions:
   envelope, CRLF line ends, Content-Length framing), so the encode
   side is map-only whole-stage codegen at any corpus size.
 * ``parse_warc_bytes(buf)`` — pure-Python record scanner (plain or
-  member-gzip input) used by both the Arrow-batched column parser
-  (``parse_warc_column``) and the file reader (``read_warc``).
-* ``read_warc(spark, path)`` — ``binaryFile`` scan (one row per
-  file, parallelism = files, exactly how the 100-TB crawl is laid
-  out: ~1 GB per file, tens of thousands of files) → ``mapInPandas``
-  parse → the input_hint page shape (url, warc_ts, html).
+  member-gzip input).
+* ``parse_warc_column(df, col)`` — the Arrow-batched parse of a
+  binary column of WARC buffers → the input_hint page shape (url,
+  warc_ts, html). Over files it runs behind a ``binaryFile`` scan
+  (one row per file, parallelism = files, exactly how the 100-TB
+  crawl is laid out: ~1 GB per file, tens of thousands of files).
 
 Reference context: rdf-diff-store ingests already-extracted graphs
 (src/bin/rdf-diff-writer.rs:45-91); the WARC layer is the north_star
@@ -38,7 +38,7 @@ from datetime import datetime
 from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -216,25 +216,3 @@ def parse_warc_column(df: DataFrame, col: str = "content") -> DataFrame:
     return df.select(col).mapInPandas(
         lambda it: _parse_batches(it, col), schema=PAGE_SCHEMA
     )
-
-
-def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
-    """Distributed WARC read: binaryFile scan (one row per file — at
-    crawl scale parallelism is the file count, which is exactly the
-    unit Common Crawl shards by) → member-gzip-aware record parse."""
-    files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return parse_warc_column(files, "content")
-
-
-def write_warc_file(records: Iterable[bytes | str], path: str, gzip_members: bool = True) -> None:
-    """Driver-side test/fixture writer: one gzip member per record
-    (the Common-Crawl layout) or plain concatenation."""
-    with open(path, "wb") as f:
-        for rec in records:
-            raw = rec.encode("utf-8") if isinstance(rec, str) else rec
-            if gzip_members:
-                co = zlib.compressobj(9, zlib.DEFLATED, 31)
-                f.write(co.compress(raw))
-                f.write(co.flush())
-            else:
-                f.write(raw)

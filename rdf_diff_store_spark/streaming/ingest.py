@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from rdf_diff_store_spark.schemas import CHANGELOG, GRAPH_UPDATES
+from rdf_diff_store_spark.schemas import CHANGELOG
 from rdf_diff_store_spark.streaming.state import CommitLog, upto_glob
 
 
@@ -238,50 +238,3 @@ class StreamingChangelogWriter:
             .trigger(processingTime=f"{trigger_seconds} seconds")
             .start()
         )
-
-
-def windowed_update_rates(updates_stream: DataFrame, window: str = "5 minutes") -> DataFrame:
-    """Observability stream: update/delete counts per event-time
-    window per op (the metrics-histogram analog, src/metrics/mod.rs).
-    Watermarked so state is bounded under late replayed data."""
-    return (
-        updates_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", window), F.col("op"))
-        .agg(
-            F.count("*").alias("n_updates"),
-            # exact distinct is unsupported in streaming aggs; HLL is
-            # the scale-appropriate choice anyway
-            F.approx_count_distinct("graph_id").alias("n_graphs"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "op",
-            "n_updates",
-            "n_graphs",
-        )
-    )
-
-
-def dedup_updates_stream(updates_stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming duplicate suppression: drop re-sent updates with the
-    same (graph_id, content) inside the watermark window —
-    `dropDuplicatesWithinWatermark` bounds the dedup state, which an
-    unbounded crawl replay needs (the batch content-hash anti-join in
-    append_updates gives the cross-batch guarantee; this removes
-    intra-window resends before they ever hit the sink)."""
-    keyed = updates_stream.withColumn(
-        "_content_key",
-        F.coalesce(F.sha2(F.col("payload"), 256), F.lit("__tombstone__")),
-    )
-    return (
-        keyed.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["graph_id", "_content_key"])
-        .drop("_content_key")
-    )
-
-
-def read_updates_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-source stream of graph updates (parquet drop-dir — the
-    sandbox stand-in for a Kafka topic of write requests)."""
-    return spark.readStream.schema(GRAPH_UPDATES).parquet(source_dir)

@@ -1,6 +1,5 @@
 """Reference on-disk interop (Turtle file source/sink), SPARQL-JSON
-results, salted skew joins, streaming dedup, and Turtle round-trip
-property tests."""
+results, and Turtle round-trip property tests."""
 
 from __future__ import annotations
 
@@ -14,7 +13,6 @@ from pyspark.sql import functions as F
 
 from rdf_diff_store_spark.functions.results import ask_json, to_sparql_json
 from rdf_diff_store_spark.functions.turtle import canonicalize, parse_turtle, serialize_triple
-from rdf_diff_store_spark.operators.skew import salted_join, skew_profile
 from rdf_diff_store_spark.operators.versioned import append_updates, snapshot_triples
 from rdf_diff_store_spark.schemas import CHANGELOG
 from rdf_diff_store_spark.sources.turtle_files import (
@@ -71,43 +69,6 @@ def test_sparql_json_results(spark):
     assert json.loads(ask_json(True)) == {"head": {}, "boolean": True}
 
 
-def test_salted_join_matches_plain_join(spark):
-    fact = spark.range(5000).select(
-        (F.pmod(F.col("id") * F.col("id"), F.lit(7))).alias("k"), F.col("id").alias("v")
-    )  # skewed: quadratic residues mod 7 hit {0,1,2,4} only
-    dim = spark.createDataFrame([(i, f"dim{i}") for i in range(7)], ["k", "label"])
-    plain = fact.join(dim, "k").select("k", "v", "label")
-    salted = salted_join(fact, dim, "k", n_salts=8).select("k", "v", "label")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    prof = skew_profile(fact, "k", top_n=1).first()
-    assert prof.n > 5000 / 7  # hub exists
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    from rdf_diff_store_spark.schemas import GRAPH_UPDATES
-    from rdf_diff_store_spark.streaming.ingest import dedup_updates_stream, read_updates_stream
-
-    src = str(tmp_path / "dd_src")
-    rows = [
-        ("g1", dt.datetime(2024, 1, 1, 0, 0, 0), "add", TTL, "text/turtle"),
-        ("g1", dt.datetime(2024, 1, 1, 0, 1, 0), "add", TTL, "text/turtle"),  # dup content
-        ("g1", dt.datetime(2024, 1, 1, 0, 2, 0), "add", TTL + " ", "text/turtle"),  # new content
-    ]
-    spark.createDataFrame(rows, GRAPH_UPDATES).write.mode("append").parquet(src)
-    deduped = dedup_updates_stream(read_updates_stream(spark, src))
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dd_out")
-        .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.sql("SELECT * FROM dd_out").collect()
-    assert len(out) == 2  # identical re-send suppressed
-
-
 # --- property-based: Turtle canonical form is a fixpoint ---------------
 
 _iri = st.text(
@@ -142,20 +103,6 @@ def test_turtle_canonicalize_is_fixpoint(triples):
     assert canonicalize(c1) == c1
     reparsed = parse_turtle(c1)
     assert canonicalize("\n".join(sorted(serialize_triple(*t) for t in reparsed)) + "\n") == c1
-
-
-def test_salted_join_rejects_dim_preserving_how(spark):
-    """right/full outer would duplicate unmatched dim rows n_salts
-    times — salted_join must refuse."""
-    import pytest as _pytest
-
-    from rdf_diff_store_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame([(1, "a")], "k int, v string")
-    dim = spark.createDataFrame([(1, "x")], "k int, w string")
-    with _pytest.raises(ValueError, match="fact-side-preserving"):
-        salted_join(fact, dim, "k", n_salts=4, how="right")
-    assert salted_join(fact, dim, "k", n_salts=4, how="left").count() == 1
 
 
 def test_serialize_graph_escapes_match_python_canonicalizer(spark):

@@ -1,8 +1,9 @@
-"""Property-table pivot + vertical partitions (operators/layout.py)."""
+"""Property-table pivot, dictionary encoding and Z-order keys
+(operators/layout.py)."""
 
 from __future__ import annotations
 
-from rdf_diff_store_spark.operators.layout import property_table, vertical_partitions
+from rdf_diff_store_spark.operators.layout import property_table
 
 ROWS = [
     ("e1", "name", "Alice"),
@@ -35,16 +36,6 @@ def test_multivalue_order_is_input_order_proof(spark):
     assert a == b
 
 
-def test_vertical_partitions(spark):
-    df = spark.createDataFrame(ROWS, ["s", "p", "o"])
-    parts = vertical_partitions(df)
-    assert set(parts) == {"email", "name"}
-    assert sorted(map(tuple, parts["email"].collect())) == [
-        ("e1", "a@x"),
-        ("e1", "b@x"),
-    ]
-
-
 def test_pivot_single_exchange(spark):
     df = spark.createDataFrame(ROWS, ["s", "p", "o"])
     plan = (
@@ -70,10 +61,11 @@ class TestDictEncode:
         return spark.createDataFrame(self.TRIPLES, "subj string, pred string, obj string")
 
     def test_roundtrip(self, spark):
-        from rdf_diff_store_spark.operators.layout import dict_decode, dict_encode
+        from rdf_diff_store_spark.operators.layout import dict_encode
 
         d, enc = dict_encode(self._t(spark))
-        back = {tuple(r) for r in dict_decode(enc, d).collect()}
+        terms = {r.term_id: r.term for r in d.collect()}
+        back = {(terms[r.s_id], terms[r.p_id], terms[r.o_id]) for r in enc.collect()}
         assert back == set(self.TRIPLES)
 
     def test_dictionary_roles(self, spark):
@@ -101,10 +93,10 @@ class TestDictEncode:
         assert expect in s_ids
 
     def test_no_collisions_here(self, spark):
-        from rdf_diff_store_spark.operators.layout import dict_collisions, dict_encode
+        from rdf_diff_store_spark.operators.layout import dict_encode
 
         d, _ = dict_encode(self._t(spark))
-        assert dict_collisions(d).count() == 0
+        assert d.select("term_id").distinct().count() == d.count()
 
     def test_encode_is_join_free(self, spark):
         from rdf_diff_store_spark.operators.layout import dict_encode

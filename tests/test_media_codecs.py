@@ -44,43 +44,3 @@ def test_png_roundtrip_any_image(w, h, ctype, data):
 def test_wav_roundtrip_any_clip(rate, channels, samples):
     r, c, out = decode_wav(encode_wav(rate, channels, samples))
     assert (r, c, out) == (rate, channels, samples)
-
-
-class TestResizePng:
-    def test_identity_resize_preserves_pixels(self):
-        from rdf_diff_store_spark.operators.multimodal import (
-            decode_png,
-            encode_png,
-            resize_png,
-        )
-
-        pix = bytes((x * 7 + y * 13) % 256 for y in range(5) for x in range(4 * 3))
-        png = encode_png(4, 5, pix, color_type=2)
-        w, h, out = decode_png(resize_png(png, 4, 5))
-        assert (w, h, out) == (4, 5, pix)
-
-    def test_nearest_neighbor_indexing(self):
-        # 4x2 gray gradient -> 2x1: nearest picks src (0,0) and (0,2)
-        from rdf_diff_store_spark.operators.multimodal import (
-            decode_png,
-            encode_png,
-            resize_png,
-        )
-
-        pix = bytes([10, 20, 30, 40, 50, 60, 70, 80])  # rows: 10..40 / 50..80
-        png = encode_png(4, 2, pix, color_type=0)
-        w, h, out = decode_png(resize_png(png, 2, 1))
-        assert (w, h) == (2, 1)
-        assert list(out) == [10, 30]  # (x*4)//2 = 0, 2 ; (y*2)//1 = 0
-
-    def test_upscale_replicates(self):
-        from rdf_diff_store_spark.operators.multimodal import (
-            decode_png,
-            encode_png,
-            resize_png,
-        )
-
-        png = encode_png(1, 1, bytes([9, 8, 7]), color_type=2)
-        w, h, out = decode_png(resize_png(png, 3, 2))
-        assert (w, h) == (3, 2)
-        assert list(out) == [9, 8, 7] * 6

@@ -115,16 +115,13 @@ class TestUnderscoreVariable:
         assert set(df.columns) == {"_s", "_n"}
         assert df.count() == 2
 
-    def test_csv_and_json_emit_underscore_var(self, spark):
-        from rdf_diff_store_spark.functions.results import to_sparql_csv, to_sparql_json
+    def test_json_emits_underscore_var(self, spark):
+        from rdf_diff_store_spark.functions.results import to_sparql_json
         from rdf_diff_store_spark.plans.sparql_text import sparql_query
 
         df = sparql_query(
             self._triples(spark), "SELECT ?_n WHERE { ?_s <p:name> ?_n } ORDER BY ?_n"
         )
-        csv = to_sparql_csv(df)
-        assert csv.splitlines()[0] == "_n"
-        assert "alice" in csv and "bob" in csv
         js = to_sparql_json(df)
         assert '"_n"' in js and "alice" in js
 

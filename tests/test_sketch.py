@@ -190,91 +190,7 @@ class TestCountMinTopk:
         assert n_noise <= rows[0].est_count < 2 * n_noise
 
 
-class TestCountMinMerge:
-    def _toks(self, spark, lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("t"), (F.col("id") % 37)).alias("tok")
-        )
-
-    def test_shard_merge_equals_whole(self, spark):
-        from rdf_diff_store_spark.operators.sketch import (
-            countmin_counters,
-            countmin_merge,
-        )
-
-        whole = countmin_counters(self._toks(spark, 0, 500))
-        merged = countmin_merge(
-            countmin_counters(self._toks(spark, 0, 200)),
-            countmin_counters(self._toks(spark, 200, 350)),
-            countmin_counters(self._toks(spark, 350, 500)),
-        )
-        assert sorted(map(tuple, whole.collect())) == sorted(
-            map(tuple, merged.collect())
-        )
-
-    def test_estimate_over_merged_matches_topk(self, spark):
-        from rdf_diff_store_spark.operators.sketch import (
-            countmin_counters,
-            countmin_estimate,
-            countmin_merge,
-        )
-
-        toks = self._toks(spark, 0, 500)
-        merged = countmin_merge(
-            countmin_counters(self._toks(spark, 0, 250)),
-            countmin_counters(self._toks(spark, 250, 500)),
-        )
-        est = {
-            r.tok: r.est_count
-            for r in countmin_estimate(
-                merged, toks.distinct(), "tok"
-            ).collect()
-        }
-        want = {
-            r.tok: r.est_count
-            for r in countmin_topk(toks, "tok", k=37).collect()
-        }
-        assert est == want
-
-
 class TestHllDistinct:
-    def test_merge_of_shards_equals_whole(self, spark):
-        # register-wise max is the merge: sketch(A ∪ B) must be
-        # bit-identical to merge(sketch(A), sketch(B))
-        from rdf_diff_store_spark.operators.sketch import (
-            hll_estimate,
-            hll_merge,
-            hll_registers,
-        )
-
-        a = spark.range(0, 3000).select(F.lit("g").alias("g"), F.col("id").alias("v"))
-        b = spark.range(2000, 6000).select(
-            F.lit("g").alias("g"), F.col("id").alias("v")
-        )
-        whole = hll_registers(a.unionByName(b), ["g"], "v", b=8)
-        merged = hll_merge(
-            hll_registers(a, ["g"], "v", b=8), hll_registers(b, ["g"], "v", b=8)
-        )
-        ew = hll_estimate(whole, ["g"], b=8).collect()[0]
-        em = hll_estimate(merged, ["g"], b=8).collect()[0]
-        assert (ew.n_regs, ew.sum_scaled, ew.est_distinct) == (
-            em.n_regs,
-            em.sum_scaled,
-            em.est_distinct,
-        )
-
-    def test_replayed_shard_merges_to_noop(self, spark):
-        # max is idempotent: merging the SAME shard twice must leave
-        # the sketch unchanged (the crash-replay safety property that
-        # additive sketches like count-min do NOT have)
-        from rdf_diff_store_spark.operators.sketch import hll_merge, hll_registers
-
-        a = spark.range(1000).select(F.lit("g").alias("g"), F.col("id").alias("v"))
-        ra = hll_registers(a, ["g"], "v", b=8)
-        once = {(r.reg): r.maxrank for r in ra.collect()}
-        twice = {(r.reg): r.maxrank for r in hll_merge(ra, ra).collect()}
-        assert once == twice
-
     def test_estimate_within_hll_error(self, spark):
         # m=256 -> sigma ~ 1.04/16 = 6.5%; allow 4 sigma, deterministic
         from rdf_diff_store_spark.operators.sketch import hll_distinct

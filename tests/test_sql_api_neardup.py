@@ -7,9 +7,10 @@ import json
 
 from pyspark.sql import functions as F
 
+from rdf_diff_store_spark.functions.results import to_sparql_json
 from rdf_diff_store_spark.operators.dedup import embedding_near_dup
 from rdf_diff_store_spark.operators.versioned import append_updates
-from rdf_diff_store_spark.plans.sql_api import execute_sql, execute_sql_json
+from rdf_diff_store_spark.plans.sql_api import execute_sql
 from rdf_diff_store_spark.schemas import CHANGELOG, GRAPH_UPDATES
 
 TTL = '@prefix ex: <http://ex.org/> .\nex:s ex:author "A" ; ex:title "T" .'
@@ -48,9 +49,11 @@ def test_execute_sql_text_over_snapshot(spark):
 def test_execute_sql_json_envelope(spark):
     log = _changelog(spark)
     doc = json.loads(
-        execute_sql_json(
-            spark, log, "2024-02-01 00:00:00",
-            "SELECT subj, obj FROM snapshot_triples WHERE pred LIKE '%author' LIMIT 1",
+        to_sparql_json(
+            execute_sql(
+                spark, log, "2024-02-01 00:00:00",
+                "SELECT subj, obj FROM snapshot_triples WHERE pred LIKE '%author' LIMIT 1",
+            )
         )
     )
     b = doc["results"]["bindings"][0]

@@ -213,16 +213,17 @@ class TestPplBuckets:
             assert head.worst_logprob >= tail.best_logprob
 
 
-class TestBpeTrain:
-    def test_classic_corpus_hand_verified(self, spark):
-        # Sennrich et al. 2016's running example family: every merge
-        # and tie-break below is hand-computed (count DESC, pair ASC)
-        from rdf_diff_store_spark.functions.text import bpe_train
+class TestBpeEncode:
+    def test_encode_matches_train_segmentation(self, spark):
+        """bpe_encode with the merges BPE training learns on Sennrich
+        et al. 2016's running example reproduces the trainer's final
+        word segmentation exactly. Merges and segmentation are
+        hand-computed: six rounds of (count DESC, pair ASC) argmax,
+        each re-segmenting greedily left to right."""
+        from rdf_diff_store_spark.functions.text import bpe_encode
 
-        text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
-        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        merges, words = bpe_train(docs, "text", n_merges=6)
-        assert merges == [
+        # corpus: low×5 lower×2 newest×6 widest×3
+        merges = [
             ("e", "s"),   # e-s 9 ties s-t 9, pair ASC
             ("es", "t"),  # 9
             ("l", "o"),   # 7 ties o-w, pair ASC
@@ -230,48 +231,12 @@ class TestBpeTrain:
             ("e", "w"),   # 6 three-way tie, "e w" smallest
             ("ew", "est"),
         ]
-        segs = {r.w: r.seg for r in words.collect()}
-        assert segs == {
+        trained = {
             "low": ["low"],
             "lower": ["low", "e", "r"],
             "newest": ["n", "ewest"],
             "widest": ["w", "i", "d", "est"],
         }
-
-    def test_greedy_left_to_right_on_runs(self, spark):
-        # "aaa" under merge (a,a): greedy L2R gives [aa, a], never [a, aa]
-        from rdf_diff_store_spark.functions.text import bpe_train
-
-        docs = spark.createDataFrame([(1, "aaa aaa aa")], "doc_id long, text string")
-        merges, words = bpe_train(docs, "text", n_merges=1)
-        assert merges == [("a", "a")]
-        segs = {r.w: r.seg for r in words.collect()}
-        assert segs["aaa"] == ["aa", "a"]
-        assert segs["aa"] == ["aa"]
-
-    def test_vocab_not_corpus_drives_rounds(self, spark):
-        # duplicating every doc 10x must not change merges (statistics
-        # live on the word-frequency table, scaled uniformly)
-        from rdf_diff_store_spark.functions.text import bpe_train
-
-        base = [(i, "banana bandana") for i in range(1)]
-        dup = [(i, "banana bandana") for i in range(10)]
-        m1, _ = bpe_train(spark.createDataFrame(base, "doc_id long, text string"), n_merges=3)
-        m2, _ = bpe_train(spark.createDataFrame(dup, "doc_id long, text string"), n_merges=3)
-        assert m1 == m2
-
-
-class TestBpeEncode:
-    def test_encode_matches_train_segmentation(self, spark):
-        """bpe_encode with the merges bpe_train learned reproduces the
-        trainer's own final word segmentation exactly — apply really
-        is the inverse-direction of train (Sennrich et al. 2016 §2)."""
-        from rdf_diff_store_spark.functions.text import bpe_encode, bpe_train
-
-        text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
-        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        merges, words = bpe_train(docs, "text", n_merges=6)
-        trained = {r.w: r.seg for r in words.collect()}
         enc = spark.createDataFrame(
             [(w,) for w in trained], "w string"
         ).select("w", bpe_encode(F.col("w"), merges).alias("toks"))

@@ -235,33 +235,6 @@ class TestSameTermIriness:
         assert [r.s for r in sparql_query(plain, q).collect()] == ["s1"]
 
 
-class TestCsvTsvResults:
-    def test_csv_quoting_and_crlf(self, typed):
-        from rdf_diff_store_spark.plans.sparql_text import sparql_csv
-
-        out = sparql_csv(typed, 'SELECT ?s ?v WHERE { ?s <p> ?v } ORDER BY ?s LIMIT 2')
-        lines = out.split("\r\n")
-        assert lines[0] == "s,v"
-        assert lines[1] == "s1,x" and lines[2] == "s2,x"
-
-    def test_tsv_terms_carry_typing(self, typed):
-        from rdf_diff_store_spark.plans.sparql_text import sparql_csv
-
-        out = sparql_csv(
-            typed, 'SELECT ?v WHERE { <s1> <p> ?v }', tsv=True
-        )
-        assert out.splitlines()[0] == "?v"
-        assert out.splitlines()[1] == '"x"@en'
-        out2 = sparql_csv(typed, 'SELECT ?v WHERE { <s4> <p> ?v }', tsv=True)
-        assert out2.splitlines()[1] == '"5"^^<http://www.w3.org/2001/XMLSchema#integer>'
-
-    def test_ask_csv(self, typed):
-        from rdf_diff_store_spark.plans.sparql_text import sparql_csv
-
-        assert sparql_csv(typed, 'ASK { ?s <p> "x"@en }') == "result\r\ntrue\r\n"
-        assert sparql_csv(typed, 'ASK { ?s <nope> ?v }', tsv=True) == "?result\nfalse\n"
-
-
 @pytest.fixture(scope="module")
 def ebv_frame(spark):
     xsd = "http://www.w3.org/2001/XMLSchema#"

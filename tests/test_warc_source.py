@@ -13,10 +13,29 @@ from pyspark.sql import functions as F
 from rdf_diff_store_spark.sources.warc import (
     parse_warc_bytes,
     parse_warc_column,
-    read_warc,
     warc_record_str,
-    write_warc_file,
 )
+
+
+def write_warc_file(records, path, gzip_members=True):
+    """Driver-side fixture writer: one gzip member per record (the
+    Common-Crawl layout) or plain concatenation."""
+    with open(path, "wb") as f:
+        for rec in records:
+            raw = rec.encode("utf-8") if isinstance(rec, str) else rec
+            if gzip_members:
+                co = zlib.compressobj(9, zlib.DEFLATED, 31)
+                f.write(co.compress(raw))
+                f.write(co.flush())
+            else:
+                f.write(raw)
+
+
+def read_warc(spark, path):
+    """The .warc.gz files under `path`: a binaryFile scan (one row
+    per file) parsed by `parse_warc_column`."""
+    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.warc*").load(path)
+    return parse_warc_column(files, "content")
 
 
 def _encode_df(df):
